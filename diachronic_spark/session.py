@@ -72,6 +72,12 @@ DEFAULT_CONFS: dict[str, str] = {
     # run-to-run jitter on cache-heavy queries).
     "spark.driver.memory": os.environ.get("SPARK_GRAFT_DRIVER_MEM", "24g"),
     "spark.ui.enabled": "false",
+    # Python workers forked from this daemon skip the per-task re-read
+    # of every zip and jar directory on their sys.path, which cost
+    # 150-270 ms a task (see _pydaemon and README "Python task fixed
+    # cost"). get_spark puts the checkout on the workers' PYTHONPATH so
+    # the daemon can import this package.
+    "spark.python.daemon.module": "diachronic_spark._pydaemon",
 }
 
 
@@ -106,6 +112,9 @@ def get_spark(
     confs = dict(DEFAULT_CONFS)
     if extra_confs:
         confs.update(extra_confs)
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    key = "spark.executorEnv.PYTHONPATH"
+    confs[key] = os.pathsep.join([root] + [p for p in [confs.get(key)] if p])
     for k, v in confs.items():
         builder = builder.config(k, v)
     return builder.getOrCreate()

@@ -124,7 +124,15 @@ def _dib_entry(
 
 def _dib_truth_rgba(ico_id: int, w: int, h: int, bpp: int, alpha: str) -> list:
     """Truth pixels for a DIB entry, from the same raw formulas the
-    assembler consumed — loop math, no codec."""
+    assembler consumed — loop math, no codec.
+
+    A 32 bpp alpha plane whose formula bytes are all zero reads as the
+    legacy zero-alpha form, so its alpha comes from the AND mask.
+    """
+    if bpp == 32 and alpha == "plane" and not any(
+        _rgba_at(ico_id, x, y, 3) for y in range(h) for x in range(w)
+    ):
+        alpha = "zero"
     rows = []
     for y in range(h):
         row = []

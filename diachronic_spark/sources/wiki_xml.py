@@ -29,7 +29,7 @@ import gzip
 import io
 import shutil
 import subprocess
-from typing import Iterator
+from typing import Callable, Iterator
 
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
@@ -118,52 +118,73 @@ def iterparse_revisions(stream) -> Iterator[tuple]:
     filter/dedup lives downstream in the declarative snapshot operator,
     where Catalyst can push predicates and fuse.
     Uses stdlib ElementTree iterparse (lxml-compatible API) with
-    element.clear() for O(page) memory, like main.py:161,170.
+    element.clear() for O(page) memory, like main.py:161,170. A page's
+    rows are emitted at ``</page>``, keyed by the page's own ``<id>``
+    (cleared revisions do not hide the page's direct children); a page
+    without one raises ``ValueError``, since no per-file stand-in is
+    unique across files.
     """
     import xml.etree.ElementTree as ET
 
     ns = f"{{{MEDIAWIKI_NS}}}"
-    page_id = 0
-    rev_seq = 0
-    title = None
-    namespace = None
-    pid = None
+    revs: list[tuple] = []
     for _, elem in ET.iterparse(stream, events=("end",)):
         tag = elem.tag.removeprefix(ns)
-        if tag == "title":
-            title = elem.text
-        elif tag == "ns":
-            namespace = elem.text
-        elif tag == "id" and pid is None:
-            pid = int(elem.text) if elem.text else None
-        elif tag == "revision":
+        if tag == "revision":
             ts_el = elem.find(f"{ns}timestamp")
             tx_el = elem.find(f"{ns}text")
             ts = None
             if ts_el is not None and ts_el.text:
                 ts = dt.datetime.strptime(ts_el.text[:-1], "%Y-%m-%dT%H:%M:%S")
-            yield (
-                pid if pid is not None else page_id,
-                rev_seq,
-                namespace,
-                title,
-                ts,
-                tx_el.text if tx_el is not None else None,
-            )
-            rev_seq += 1
+            revs.append((ts, tx_el.text if tx_el is not None else None))
             elem.clear()
         elif tag == "page":
-            page_id += 1
-            rev_seq = 0
-            title = None
-            namespace = None
-            pid = None
+            title = _child_text(elem, f"{ns}title")
+            pid = _child_text(elem, f"{ns}id")
+            if not pid:
+                raise ValueError(f"<page> {title!r} has no <id> of its own")
+            namespace = _child_text(elem, f"{ns}ns")
+            for rev_seq, (ts, text) in enumerate(revs):
+                yield (int(pid), rev_seq, namespace, title, ts, text)
+            revs = []
             elem.clear()
+
+
+def _child_text(elem, tag: str) -> str | None:
+    child = elem.find(tag)
+    return child.text if child is not None else None
 
 
 PARSE_STATUS_SCHEMA = REVISION_SQL_SCHEMA + ", src_path string, error string"
 
 _REV_COLS = ["page_id", "rev_seq", "namespace", "title", "timestamp", "text"]
+
+
+def _file_per_task(
+    spark: SparkSession,
+    paths: list[str],
+    parse: Callable[[str], Iterator[pd.DataFrame]],
+    schema: str,
+) -> DataFrame:
+    """``parse`` mapped over ``paths``, exactly one file per task.
+
+    A hash repartition on the path can stack several files on one task
+    and leave others empty (each still paying the Python-task fixed
+    cost); round-robin from a single input partition puts exactly one
+    row in each output partition. The rows are indexes into ``paths``,
+    which ship in the closure. The queue stays a shuffle input, so each
+    parse task's shuffle read counts the files it was handed.
+    """
+
+    def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        for pdf in batches:
+            for i in pdf["id"]:
+                yield from parse(paths[i])
+
+    n = len(paths)
+    return spark.range(0, n, 1, 1).repartition(max(n, 1)).mapInPandas(
+        fn, schema
+    )
 
 
 def parse_dump_files_with_status(
@@ -180,29 +201,22 @@ def parse_dump_files_with_status(
     streaming decompress → iterparse → Arrow batches.
     """
 
-    def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            for path in pdf["path"]:
-                try:
-                    rows = list(iterparse_revisions(_open_stream(path)))
-                except Exception as e:  # the reference's per-file net
-                    yield pd.DataFrame(
-                        [[None] * len(_REV_COLS) + [path, f"{type(e).__name__}: {e}"]],
-                        columns=_REV_COLS + ["src_path", "error"],
-                    )
-                    continue
-                if rows:
-                    out = pd.DataFrame(rows, columns=_REV_COLS)
-                    out["src_path"] = path
-                    out["error"] = None
-                    yield out
+    def parse(path: str) -> Iterator[pd.DataFrame]:
+        try:
+            rows = list(iterparse_revisions(_open_stream(path)))
+        except Exception as e:  # the reference's per-file net
+            yield pd.DataFrame(
+                [[None] * len(_REV_COLS) + [path, f"{type(e).__name__}: {e}"]],
+                columns=_REV_COLS + ["src_path", "error"],
+            )
+            return
+        if rows:
+            out = pd.DataFrame(rows, columns=_REV_COLS)
+            out["src_path"] = path
+            out["error"] = None
+            yield out
 
-    from ..operators._cache import local_relation
-
-    files = local_relation(
-        spark, [(p,) for p in paths], "path string"
-    ).repartition(max(len(paths), 1), "path")
-    return files.mapInPandas(fn, PARSE_STATUS_SCHEMA)
+    return _file_per_task(spark, paths, parse, PARSE_STATUS_SCHEMA)
 
 
 def split_parse_failures(parsed: DataFrame) -> tuple[DataFrame, DataFrame]:
@@ -219,17 +233,9 @@ def parse_dump_files(spark: SparkSession, paths: list[str]) -> DataFrame:
     (use parse_dump_files_with_status for the reference's log-and-
     continue behavior)."""
 
-    def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            for path in pdf["path"]:
-                stream = _open_stream(path)
-                rows = list(iterparse_revisions(stream))
-                if rows:
-                    yield pd.DataFrame(rows, columns=_REV_COLS)
+    def parse(path: str) -> Iterator[pd.DataFrame]:
+        rows = list(iterparse_revisions(_open_stream(path)))
+        if rows:
+            yield pd.DataFrame(rows, columns=_REV_COLS)
 
-    from ..operators._cache import local_relation
-
-    files = local_relation(
-        spark, [(p,) for p in paths], "path string"
-    ).repartition(max(len(paths), 1), "path")
-    return files.mapInPandas(fn, REVISION_SQL_SCHEMA)
+    return _file_per_task(spark, paths, parse, REVISION_SQL_SCHEMA)

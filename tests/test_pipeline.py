@@ -197,6 +197,89 @@ def test_parse_with_status_logs_failures_and_continues(
     assert fail_rows[0].error
 
 
+def test_parse_gives_each_file_its_own_task(spark, xml_paths, tmp_path):
+    """One file per parse task: N files make N partitions, each holding
+    the rows of exactly one src_path (a hash queue could stack files)."""
+    from pyspark.sql import functions as F
+
+    from diachronic_spark.sources.wiki_xml import parse_dump_files_with_status
+
+    _rows, pa, pb = xml_paths
+    pc = tmp_path / "dump-c.xml"
+    pc.write_bytes(pathlib.Path(pa).read_bytes())
+    paths = [pa, pb, str(pc)]
+    parsed = parse_dump_files_with_status(spark, paths)
+    parts = (
+        parsed.select(F.spark_partition_id().alias("part"), "src_path")
+        .distinct()
+        .collect()
+    )
+    by_part: dict[int, list[str]] = {}
+    for r in parts:
+        by_part.setdefault(r.part, []).append(r.src_path)
+    assert len(by_part) == len(paths)
+    assert all(len(v) == 1 for v in by_part.values())
+    assert sorted(v[0] for v in by_part.values()) == sorted(paths)
+
+
+def test_parse_of_zero_files_is_empty_with_schema(spark):
+    from diachronic_spark.sources.wiki_xml import (
+        PARSE_STATUS_SCHEMA,
+        REVISION_SQL_SCHEMA,
+        parse_dump_files,
+        parse_dump_files_with_status,
+    )
+
+    for parse, schema in [
+        (parse_dump_files_with_status, PARSE_STATUS_SCHEMA),
+        (parse_dump_files, REVISION_SQL_SCHEMA),
+    ]:
+        df = parse(spark, [])
+        assert df.schema == spark.createDataFrame([], schema).schema
+        assert df.collect() == []
+
+
+ORPHAN_XML = f"""<mediawiki xmlns="{MEDIAWIKI_NS}">
+<page><title>Kept</title><ns>0</ns><id>7</id>
+<revision><id>71</id><timestamp>2024-03-01T08:00:00Z</timestamp>
+<text>kept</text></revision></page>
+<page><title>Orphan</title><ns>0</ns>
+<revision><id>81</id><timestamp>2024-03-01T09:00:00Z</timestamp>
+<contributor><id>5</id></contributor><text>orphan</text></revision></page>
+</mediawiki>"""
+
+
+def test_page_without_own_id_fails_loudly(spark, xml_paths, tmp_path):
+    """A <page> with no <id> child must not borrow a revision or
+    contributor id (or a per-file counter): the parse raises, naming
+    the page, and the with-status parse records the file as failed."""
+    import io
+
+    from diachronic_spark.sources.wiki_xml import (
+        iterparse_revisions,
+        parse_dump_files,
+        parse_dump_files_with_status,
+        split_parse_failures,
+    )
+
+    with pytest.raises(ValueError, match="'Orphan' has no <id>"):
+        list(iterparse_revisions(io.BytesIO(ORPHAN_XML.encode())))
+
+    bad = tmp_path / "orphan.xml"
+    bad.write_text(ORPHAN_XML, encoding="utf-8")
+    with pytest.raises(Exception, match="'Orphan' has no <id>"):
+        parse_dump_files(spark, [str(bad)]).collect()
+
+    _rows, pa, _pb = xml_paths
+    revisions, failures = split_parse_failures(
+        parse_dump_files_with_status(spark, [pa, str(bad)])
+    )
+    fail_rows = failures.collect()
+    assert [r.src_path for r in fail_rows] == [str(bad)]
+    assert fail_rows[0].error.startswith("ValueError: <page> 'Orphan'")
+    assert revisions.count() == parse_dump_files(spark, [pa]).count()
+
+
 def test_pipeline_config_from_yaml(tmp_path):
     """conf.yml layout parity (reference diachronic/conf.yml:1-15) with
     safe_load and call-time I/O."""
