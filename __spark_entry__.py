@@ -226,10 +226,14 @@ _ADJUDICATED_ROUND: dict[str, int] = {
 # (q184 and q188, also edited, have no driver row yet and so lead the
 # order as never-checked), and q109, whose snapshot_from_dumps parse now
 # runs one file per task and rejects pages without their own <id>.
+# q21 and q105 run daily_snapshot, now written through the shared
+# winner rule in operators/snapshot.py (q109/q121/q152/q155/q158,
+# also on the rewritten snapshot paths, are listed already).
 _STALE: tuple[str, ...] = (
-    "q80", "q109", "q111", "q112", "q113", "q117", "q121", "q124",
-    "q133", "q136", "q139", "q141", "q148", "q152", "q155", "q156",
-    "q158", "q186", "q187", "q189", "q194", "q195", "q197", "q204",
+    "q21", "q80", "q105", "q109", "q111", "q112", "q113", "q117",
+    "q121", "q124", "q133", "q136", "q139", "q141", "q148", "q152",
+    "q155", "q156", "q158", "q186", "q187", "q189", "q194", "q195",
+    "q197", "q204",
 )
 
 

@@ -549,17 +549,6 @@ def containment_pairs(
     )
 
 
-def exact_dedup(documents: DataFrame, key: str = "text") -> DataFrame:
-    """L1 exact dedup: keep the min-doc_id representative per content
-    hash (deterministic, unlike dropDuplicates)."""
-    w = Window.partitionBy(F.sha2(F.col(key), 256)).orderBy("doc_id")
-    return (
-        documents.withColumn("__rn", F.row_number().over(w))
-        .filter(F.col("__rn") == 1)
-        .drop("__rn")
-    )
-
-
 def connected_components(
     edges: DataFrame,
     nodes: DataFrame,

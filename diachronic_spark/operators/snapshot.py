@@ -9,7 +9,7 @@ Two forms:
 - ``daily_snapshot`` (canonical, declarative): window dedup. Exactly
   equivalent to the reference loop whenever revisions are
   timestamp-sorted within a page — which MediaWiki dumps are. Scales:
-  one shuffle on (title, day), no Python boundary, whole-stage codegen.
+  one shuffle on (page_id, day), no Python boundary, whole-stage codegen.
 
 - ``daily_snapshot_sequential`` (fidelity spec): replays the reference's
   monotone-threshold loop per page via applyInPandas, reproducing the
@@ -28,22 +28,21 @@ from typing import Iterable
 import pandas as pd
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
-from pyspark.sql.types import StructType
+
+from ..schemas import REVISIONS
 
 
 @contextmanager
 def _driver_side_listing(spark, n_paths: int):
     """Scope-raise the parallel-partition-discovery threshold so a
     bounded, already-known path list is listed driver-side
-    (OPTIMIZATION r11, guide §6 file listing): when the refresh/read
-    passes more than 32 explicit day directories, Spark otherwise
-    launches a DISTRIBUTED listing job — one task per directory — to
-    discover files the driver could stat in microseconds each on a
-    local filesystem. The path list here is delta-touched metadata
-    (O(touched days)), never the whole store, so driver-side listing
-    stays O(delta) at any store size; the threshold is restored on
-    exit so unrelated scans keep the default behavior (which IS right
-    for huge object-store layouts)."""
+    (OPTIMIZATION r11, guide §6 file listing): when ``read_partitions``
+    passes more than 32 explicit directories, Spark otherwise launches
+    a DISTRIBUTED listing job — one task per directory — to discover
+    files the driver could stat in microseconds each on a local
+    filesystem. The threshold is restored on exit so unrelated scans
+    keep the default behavior (which IS right for huge object-store
+    layouts)."""
     key = "spark.sql.sources.parallelPartitionDiscovery.threshold"
     try:
         old = spark.conf.get(key)
@@ -58,44 +57,43 @@ def _driver_side_listing(spark, n_paths: int):
         else:
             spark.conf.set(key, old)
 
+
 DEFAULT_EPOCH = dt.datetime(2001, 1, 15)  # reference conf.yml:7
 
 _OUT_COLS = ["namespace", "title", "timestamp", "text"]  # main.py:111
 
 
-def daily_snapshot(
-    revisions: DataFrame,
-    epoch: dt.datetime = DEFAULT_EPOCH,
-    key: str | list[str] = "page_id",
-    ts: str = "timestamp",
-) -> DataFrame:
-    """First revision per (key, calendar day), day >= epoch, ns-0 only.
-
-    ``key`` is the page identity: the reference's state is per PAGE
-    (reset at </page>, main.py:163-164), so distinct pages that share a
-    title do NOT interfere (FIXTURES.md §3.7). Use ``page_id`` when the
-    source carries it; ``title`` is equivalent only under MediaWiki's
-    one-page-per-(ns,title) invariant.
-
-    Plan shape at scale: parquet scan (namespace/epoch filters pushed
-    down) → single hash-partition shuffle on (key, day) → in-partition
-    sort → rank. Popular pages do not skew: the partition key includes
-    the day, so one page's history spreads across many partitions.
-    """
-    keys = [key] if isinstance(key, str) else list(key)
-    # rev_seq (document order) breaks exact-timestamp ties deterministically
-    order = [ts] + (["rev_seq"] if "rev_seq" in revisions.columns else [])
-    w = Window.partitionBy(*keys, F.to_date(F.col(ts))).orderBy(*order)
+def _first_of_day(df: DataFrame, day) -> DataFrame:
+    """The snapshot winner rule: per (page_id, day), keep row 1 ordered
+    by (timestamp, rev_seq); rev_seq (document order) breaks
+    exact-timestamp ties deterministically. ``day`` is
+    ``to_date(timestamp)`` on raw revisions and the stored ``day``
+    column on state rows, so a frame already hash-partitioned on
+    ``day`` windows without a second exchange."""
+    w = Window.partitionBy("page_id", day).orderBy("timestamp", "rev_seq")
     return (
-        revisions.filter(
-            (F.col("namespace") == "0") & (F.col(ts) >= F.lit(epoch))
-        )
-        .withColumn("__rn", F.row_number().over(w))
+        df.withColumn("__rn", F.row_number().over(w))
         .filter(F.col("__rn") == 1)
         .drop("__rn")
-        .withColumn("text", F.coalesce(F.col("text"), F.lit("")))
-        .select(*_OUT_COLS)
     )
+
+
+def daily_snapshot(
+    revisions: DataFrame, epoch: dt.datetime = DEFAULT_EPOCH
+) -> DataFrame:
+    """First revision per (page, calendar day), day >= epoch, ns-0 only.
+
+    The page identity is ``page_id``: the reference's state is per PAGE
+    (reset at </page>, main.py:163-164), so distinct pages that share a
+    title do NOT interfere (FIXTURES.md §3.7).
+
+    Plan shape at scale: parquet scan (namespace/epoch filters pushed
+    down) → single hash-partition shuffle on (page_id, day) →
+    in-partition sort → rank. Popular pages do not skew: the partition
+    key includes the day, so one page's history spreads across many
+    partitions.
+    """
+    return snapshot_state(revisions, epoch).select(*_OUT_COLS)
 
 
 def replay_page(rows: Iterable[dict], epoch: dt.datetime = DEFAULT_EPOCH) -> list[dict]:
@@ -140,8 +138,7 @@ def daily_snapshot_sequential(
         out = replay_page(pdf.to_dict("records"), epoch)
         return pd.DataFrame(out, columns=_OUT_COLS)
 
-    out_schema = "namespace string, title string, timestamp timestamp, text string"
-    return revisions.groupBy("page_id").applyInPandas(fn, out_schema)
+    return revisions.groupBy("page_id").applyInPandas(fn, REVISIONS)
 
 
 # --- Incremental snapshot maintenance (the W1 materialized view) -----------
@@ -151,53 +148,41 @@ def daily_snapshot_sequential(
 # state table, refreshed by merging each new revision batch without
 # ever rescanning the revision history — a materialized view refresh.
 #
-# Key algebraic fact: the snapshot winner per (key, day) is an argmin
+# Key algebraic fact: the snapshot winner per (page_id, day) is an argmin
 # under the total order (timestamp, rev_seq), and argmin is
 # ASSOCIATIVE — argmin(A ∪ B) = argmin({argmin(A)} ∪ {argmin(B)}).
 # So the maintained state only needs the comparator columns
 # (timestamp, rev_seq) alongside the payload, and a delta batch
 # refresh is: dedup the delta, touch ONLY the state rows whose
-# (key, day) the delta hits, re-argmin those unions, pass every other
+# (page_id, day) the delta hits, re-argmin those unions, pass every other
 # state row through untouched.
 
 
 def snapshot_state(
-    revisions: DataFrame,
-    epoch: dt.datetime = DEFAULT_EPOCH,
-    key: str | list[str] = "page_id",
-    ts: str = "timestamp",
+    revisions: DataFrame, epoch: dt.datetime = DEFAULT_EPOCH
 ) -> DataFrame:
     """``daily_snapshot`` keeping its maintenance state: the winner
-    per (key, day) WITH the key, day, and comparator columns
+    per (page_id, day) WITH the day and comparator columns
     (timestamp, rev_seq) the incremental merge needs. ``rev_seq``
-    must be present (unique per row within a (key, day) across ALL
-    batches — document order provides this) so ties replay exactly.
+    must be unique per row within a (page_id, day) across ALL
+    batches — document order provides this — so ties replay exactly.
 
-    Schema: (*keys, day, rev_seq, namespace, title, timestamp, text).
-    Same plan shape as ``daily_snapshot``: one shuffle on (key, day).
+    Schema: (page_id, day, rev_seq, namespace, title, timestamp, text).
+    Same plan shape as ``daily_snapshot``: one shuffle on (page_id, day).
     """
-    keys = [key] if isinstance(key, str) else list(key)
-    day = F.to_date(F.col(ts)).alias("day")
-    w = Window.partitionBy(*keys, F.to_date(F.col(ts))).orderBy(
-        ts, "rev_seq"
+    day = F.to_date(F.col("timestamp"))
+    live = revisions.filter(
+        (F.col("namespace") == "0") & (F.col("timestamp") >= F.lit(epoch))
     )
     return (
-        revisions.filter(
-            (F.col("namespace") == "0") & (F.col(ts) >= F.lit(epoch))
-        )
-        .withColumn("__rn", F.row_number().over(w))
-        .filter(F.col("__rn") == 1)
+        _first_of_day(live, day)
         .withColumn("text", F.coalesce(F.col("text"), F.lit("")))
-        .select(*keys, day, "rev_seq", *_OUT_COLS)
+        .select("page_id", day.alias("day"), "rev_seq", *_OUT_COLS)
     )
 
 
 def merge_snapshot_state(
-    state: DataFrame,
-    delta: DataFrame,
-    epoch: dt.datetime = DEFAULT_EPOCH,
-    key: str | list[str] = "page_id",
-    ts: str = "timestamp",
+    state: DataFrame, delta: DataFrame, epoch: dt.datetime = DEFAULT_EPOCH
 ) -> DataFrame:
     """Refresh a maintained ``snapshot_state`` table with a new batch
     of revisions WITHOUT recomputing from history:
@@ -206,31 +191,22 @@ def merge_snapshot_state(
     driver-adjudicated by q152 against a full-recompute oracle).
 
     Scale shape — the part that matters at 100 TB: the STATE IS NEVER
-    SHUFFLED. The delta's (key, day) set is tiny by construction (a
-    day's arrivals vs all of history), so the affected/untouched split
-    is two broadcast semi/anti joins evaluated map-side over one state
-    scan each; the window re-argmin runs only on (affected winners ∪
-    delta winners) — delta-sized. With the state at rest partitioned
-    by day (pipeline.write_partitioned), the broadcast semi join
-    additionally prunes to the touched day partitions, making refresh
-    cost O(delta), independent of state size. Rewriting only touched
-    partitions (not returned-DataFrame-wide) is the storage-side
-    half of the same contract.
+    SHUFFLED. The delta's (page_id, day) set is tiny by construction
+    (a day's arrivals vs all of history), so the affected/untouched
+    split is two broadcast semi/anti joins evaluated map-side over one
+    state scan each; the window re-argmin runs only on (affected
+    winners ∪ delta winners) — delta-sized. ``refresh_snapshot_store``
+    is the same merge for the state at rest, where only the touched
+    day partitions are read and rewritten.
     """
-    keys = [key] if isinstance(key, str) else list(key)
-    dstate = snapshot_state(delta, epoch, key, ts)
-    on = [*keys, "day"]
+    dstate = snapshot_state(delta, epoch)
+    on = ["page_id", "day"]
     dk = F.broadcast(dstate.select(*on).distinct())
     untouched = state.join(dk, on, "left_anti")
     affected = state.join(dk, on, "left_semi")
-    w = Window.partitionBy(*on).orderBy(ts, "rev_seq")
-    merged = (
-        affected.unionByName(dstate)
-        .withColumn("__rn", F.row_number().over(w))
-        .filter(F.col("__rn") == 1)
-        .drop("__rn")
+    return untouched.unionByName(
+        _first_of_day(affected.unionByName(dstate), "day")
     )
-    return untouched.unionByName(merged)
 
 
 #: the store's at-rest schema as written by ``refresh_snapshot_store``
@@ -241,38 +217,65 @@ STORE_READ_SCHEMA = (
 )
 
 
-def read_snapshot_store(spark, path: str):
-    """Read a day-partitioned snapshot store via its own partition
-    manifest (OPTIMIZATION r11, VERDICT r10 item 4 / guide §6): a bare
-    ``spark.read.parquet(path)`` re-DISCOVERS the layout — with >32
-    day directories that is a distributed listing job per read, plus
-    footer reads for schema inference. One driver ``listStatus``
-    yields the day list (O(partitions) metadata, the same scale as the
-    refresh's own bookkeeping), the schema is the store's write
-    schema, and the explicit ``basePath`` read returns the same files
-    and rows with no discovery job."""
-    jvm_path = spark._jvm.org.apache.hadoop.fs.Path(path)
-    fs = jvm_path.getFileSystem(spark._jsc.hadoopConfiguration())
-    day_dirs = sorted(
-        f.getPath().toString()
-        for f in fs.listStatus(jvm_path)
-        if f.getPath().getName().startswith("day=")
+def _fs_root(spark, path: str):
+    root = spark._jvm.org.apache.hadoop.fs.Path(path)
+    return root.getFileSystem(spark._jsc.hadoopConfiguration()), root
+
+
+def read_partitions(
+    spark, path: str, col: str, schema: str, values: Iterable | None = None
+) -> DataFrame | None:
+    """Read the ``<col>=<value>`` directories of a partitioned parquet
+    dir via its own partition manifest (OPTIMIZATION r11, guide §6): a
+    bare ``spark.read.parquet(path)`` re-DISCOVERS the layout — with
+    >32 partition directories that is a distributed listing job per
+    read, plus footer reads for schema inference. One driver
+    ``listStatus`` yields the directory list (O(partitions) metadata),
+    ``schema`` is the writer's own, and the explicit ``basePath`` read
+    returns the same files and rows with no discovery job.
+
+    ``values`` limits the read to those partition values; a value with
+    no directory is skipped. Returns None when no directory matches,
+    including when ``path`` does not exist.
+    """
+    fs, root = _fs_root(spark, path)
+    names = (
+        [f.getPath().getName() for f in fs.listStatus(root)]
+        if fs.exists(root)
+        else []
     )
-    with _driver_side_listing(spark, len(day_dirs)):
+    if values is None:
+        names = [n for n in names if n.startswith(f"{col}=")]
+    else:
+        wanted = {f"{col}={v}" for v in values}
+        names = [n for n in names if n in wanted]
+    if not names:
+        return None
+    dirs = [f"{path}/{n}" for n in sorted(names)]
+    with _driver_side_listing(spark, len(dirs)):
         return (
-            spark.read.schema(STORE_READ_SCHEMA)
-            .option("basePath", path)
-            .parquet(*day_dirs)
+            spark.read.schema(schema).option("basePath", path).parquet(*dirs)
         )
 
 
+def read_snapshot_store(spark, path: str) -> DataFrame:
+    """Read a snapshot store written by ``refresh_snapshot_store``
+    (``read_partitions`` over its day directories). A missing root
+    raises ``FileNotFoundError`` and a root without ``day=``
+    directories raises ``ValueError``, both naming the path."""
+    store = read_partitions(spark, path, "day", STORE_READ_SCHEMA)
+    if store is None:
+        fs, root = _fs_root(spark, path)
+        if not fs.exists(root):
+            raise FileNotFoundError(f"snapshot store {path!r} does not exist")
+        raise ValueError(
+            f"snapshot store {path!r} has no day= partition directories"
+        )
+    return store
+
+
 def refresh_snapshot_store(
-    spark,
-    path: str,
-    delta: DataFrame,
-    epoch: dt.datetime = DEFAULT_EPOCH,
-    key: str | list[str] = "page_id",
-    ts: str = "timestamp",
+    spark, path: str, delta: DataFrame, epoch: dt.datetime = DEFAULT_EPOCH
 ) -> list:
     """The STORAGE-side half of ``merge_snapshot_state`` (VERDICT r7
     item 2): refresh a ``snapshot_state`` table AT REST — written
@@ -281,17 +284,20 @@ def refresh_snapshot_store(
     files are never opened and stay byte-identical on disk
     (test-pinned, tests/test_snapshot.py).
 
+    This is the store's only writer: a missing ``path`` is an empty
+    store, so a store is created by refreshing a new path with its
+    first batch.
+
     Mechanics:
 
     1. the delta's own winners (``snapshot_state(delta)``) yield the
        TOUCHED DAY LIST — delta-sized metadata collected driver-side
-       (the same KB-scale trick as an IVF probe's cell lookup), so
-       the state scan filters ``day IN (<literals>)`` and Catalyst
-       prunes untouched partitions at PLANNING time
-       (PartitionFilters, never listed into the scan);
-    2. the re-argmin window runs over (touched partitions ∪ delta
-       winners) — rows of non-hit keys inside a touched day pass
-       through as their own argmin singletons;
+       (the same KB-scale trick as an IVF probe's cell lookup);
+    2. only the touched day directories are read
+       (``read_partitions``), and the re-argmin window runs over
+       (touched partitions ∪ delta winners) — rows of non-hit pages
+       inside a touched day pass through as their own argmin
+       singletons;
     3. the write uses DYNAMIC partition overwrite: only the
        partitions present in the merged frame are replaced — an
        untouched day's files are not deleted, not rewritten, not
@@ -302,12 +308,10 @@ def refresh_snapshot_store(
     "state never shuffled" compute contract q152 adjudicates.
     Returns the touched day list (empty = nothing written).
     """
-    keys = [key] if isinstance(key, str) else list(key)
-    on = [*keys, "day"]
     # the delta's winners feed BOTH the touched-day collect and the
     # re-argmin union; persisting the delta-sized frame makes the
     # second reference a cache hit instead of a re-windowed delta scan
-    dstate = snapshot_state(delta, epoch, key, ts).persist()
+    dstate = snapshot_state(delta, epoch).persist()
     try:
         touched = sorted(
             r["day"] for r in dstate.select("day").distinct().collect()
@@ -319,58 +323,29 @@ def refresh_snapshot_store(
         # SCAN at planning, but first pays a file-listing job over
         # EVERY partition directory — measured: one task per dir,
         # O(total partitions) per refresh, 2.14x wall at 10x state
-        # (SCALING_STORE10X pre-fix). The touched-day list is already
-        # driver-side metadata, so the path list IS the partition
-        # predicate and listing cost drops to O(touched). Days new to
-        # the store have no directory yet — they need no affected
-        # rows (the delta winners found them via dynamic overwrite).
-        jvm_path = spark._jvm.org.apache.hadoop.fs.Path(path)
-        fs = jvm_path.getFileSystem(spark._jsc.hadoopConfiguration())
-        existing = {
-            f.getPath().getName() for f in fs.listStatus(jvm_path)
-        }
-        dirs = [
-            f"{path}/day={d}" for d in touched if f"day={d}" in existing
-        ]
-        w = Window.partitionBy(*on).orderBy(ts, "rev_seq")
-        if dirs:
-            # explicit read schema (OPTIMIZATION r11, guide §6): the
-            # at-rest schema is dstate's own (data columns + trailing
-            # day partition column), so inferring it would only re-read
-            # parquet footers at plan time, per refresh
-            fields = {f.name: f for f in dstate.schema.fields}
-            read_schema = StructType(
-                [fields[c] for c in dstate.columns if c != "day"]
-                + [fields["day"]]
-            )
-            with _driver_side_listing(spark, len(dirs)):
-                affected = (
-                    spark.read.schema(read_schema)
-                    .option("basePath", path)
-                    .parquet(*dirs)
-                )
-                merged = affected.unionByName(
-                    dstate.select(*affected.columns)
-                )
-        else:
-            merged = dstate  # every touched day is new to the store
-        # ONE shuffle on day (OPTIMIZATION r11, guide §2.4): hash(day)
-        # partitioning satisfies the window's (key, day) clustering —
-        # all rows of a (key, day) share the day — so repartitioning
-        # FIRST lets the re-argmin window run with an in-partition
-        # sort, no second exchange (plan-verified 2 Exchange -> 1),
-        # and the write still sees each day in exactly one task: each
-        # rewritten partition stays ONE file per refresh (repeated
-        # refreshes otherwise accrete small-file shrapnel that
-        # degrades every later scan).
-        merged = (
-            merged.repartition("day")
-            .withColumn("__rn", F.row_number().over(w))
-            .filter(F.col("__rn") == 1)
-            .drop("__rn")
+        # (SCALING_STORE10X pre-fix). Days new to the store have no
+        # directory yet — they need no affected rows (the delta
+        # winners create them via dynamic overwrite).
+        affected = read_partitions(
+            spark, path, "day", STORE_READ_SCHEMA, touched
         )
+        merged = (
+            dstate
+            if affected is None
+            else affected.unionByName(dstate.select(*affected.columns))
+        )
+        # ONE shuffle on day (OPTIMIZATION r11, guide §2.4): hash(day)
+        # partitioning satisfies the window's (page_id, day)
+        # clustering — all rows of a (page_id, day) share the day — so
+        # repartitioning FIRST lets the re-argmin window run with an
+        # in-partition sort, no second exchange (plan-verified 2
+        # Exchange -> 1), and the write still sees each day in exactly
+        # one task: each rewritten partition stays ONE file per refresh
+        # (repeated refreshes otherwise accrete small-file shrapnel
+        # that degrades every later scan).
         (
-            merged.write.mode("overwrite")
+            _first_of_day(merged.repartition("day"), "day")
+            .write.mode("overwrite")
             .option("partitionOverwriteMode", "dynamic")
             .partitionBy("day")
             .parquet(path)

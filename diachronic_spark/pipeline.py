@@ -8,7 +8,7 @@ Scale design (SURVEY §4.3):
 - output partitioned by wiki (S7) with zstd (brotli optional — needs a
   codec jar, S6); ``maxRecordsPerFile`` bounds file size against
   MB-scale article texts (watch-list 2).
-- the snapshot dedup is one shuffle on (title, day); everything before
+- the snapshot dedup is one shuffle on (page_id, day); everything before
   it is narrow (parse tasks), everything after is the write.
 - no RSS polling (main.py:163-170): Tungsten spills; file sizing is
   declarative.

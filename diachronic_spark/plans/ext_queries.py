@@ -2305,23 +2305,14 @@ def q121(spark: SparkSession, sf: str) -> DataFrame:
     # driver listStatus + the writer's schema, instead of a
     # distributed partition-discovery job + footer inference per run
     # (guide §6 — the q158/q155 store-read treatment)
-    from ..operators.snapshot import _driver_side_listing
+    from ..operators.snapshot import read_partitions
 
-    jp = spark._jvm.org.apache.hadoop.fs.Path(path)
-    fs = jp.getFileSystem(spark._jsc.hadoopConfiguration())
-    day_dirs = sorted(
-        f.getPath().toString()
-        for f in fs.listStatus(jp)
-        if f.getPath().getName().startswith("d=")
+    back = read_partitions(
+        spark,
+        path,
+        "d",
+        "event_id bigint, user_id bigint, value double, d date",
     )
-    with _driver_side_listing(spark, len(day_dirs)):
-        back = (
-            spark.read.schema(
-                "event_id bigint, user_id bigint, value double, d date"
-            )
-            .option("basePath", path)
-            .parquet(*day_dirs)
-        )
     return back.select(
         "event_id",
         "user_id",
@@ -3729,10 +3720,7 @@ def q155(spark: SparkSession, sf: str) -> DataFrame:
 
     from ..catalog import ensure_confs
     from ..functions import ts_str
-    from ..operators.snapshot import (
-        refresh_snapshot_store,
-        snapshot_state,
-    )
+    from ..operators.snapshot import refresh_snapshot_store
     from ..schemas import WIKI_REVISIONS
     from ..sources.wiki_fixture import FIXTURE_PATH
 
@@ -3754,9 +3742,7 @@ def q155(spark: SparkSession, sf: str) -> DataFrame:
     # metadata-only restore cost.
     if sf not in _Q155_DIRS:
         root = tempfile.mkdtemp(prefix="diachronic_snapstore_q155_")
-        snapshot_state(base).repartition("day").write.mode(
-            "overwrite"
-        ).partitionBy("day").parquet(f"{root}/pristine")
+        refresh_snapshot_store(spark, f"{root}/pristine", base)
         _Q155_DIRS[sf] = root
     root = _Q155_DIRS[sf]
     path = f"{root}/store"

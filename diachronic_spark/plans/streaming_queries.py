@@ -75,6 +75,9 @@ assert WATERMARK == "1 day" and WATERMARK_MS == 24 * 3600 * 1000
 
 
 _STAGE_CACHE: dict[str, str] = {}
+# temp dirs created per query run (unlike the cached stage dirs, these
+# are written fresh each call); removed with the same atexit hook
+_EPHEMERAL_DIRS: list[str] = []
 
 
 def q197(spark: SparkSession, sf: str) -> DataFrame:
@@ -136,13 +139,14 @@ def q197(spark: SparkSession, sf: str) -> DataFrame:
 
 
 @atexit.register
-def _cleanup_stage_dirs() -> None:
-    """Staged copies are process-scoped scratch; without this, every
-    bench/scaling run leaks a full copy of the events table per sf
-    (ADVICE r2)."""
-    for path in _STAGE_CACHE.values():
+def _cleanup_dirs() -> None:
+    """Staged copies and per-run dirs are process-scoped scratch;
+    without this, every bench/scaling run leaks a full copy of the
+    events table per sf (ADVICE r2)."""
+    for path in [*_STAGE_CACHE.values(), *_EPHEMERAL_DIRS]:
         shutil.rmtree(path, ignore_errors=True)
     _STAGE_CACHE.clear()
+    _EPHEMERAL_DIRS.clear()
 
 
 def _stage(spark: SparkSession, key: str, df_factory) -> str:
@@ -1032,11 +1036,6 @@ def q136(spark: SparkSession, sf: str) -> DataFrame:
     ).orderBy("batch", "doc_id")
 
 
-# temp dirs created per query run (unlike the cached stage dirs, these
-# are written fresh each call); removed with the same atexit hook
-_EPHEMERAL_DIRS: list[str] = []
-
-
 def _stage_revision_stream(spark, sf: str) -> tuple[str, str]:
     """Split the committed wiki-revision fixture into a BASE slice
     (founds the store) and three DELTA files staged for the file
@@ -1100,10 +1099,7 @@ def q158(spark: SparkSession, sf: str) -> DataFrame:
     the disk round-trip.
     """
     from ..functions import ts_str
-    from ..operators.snapshot import (
-        refresh_snapshot_store,
-        snapshot_state,
-    )
+    from ..operators.snapshot import refresh_snapshot_store
     from ..schemas import WIKI_REVISIONS
 
     base_path, delta_path = _stage_revision_stream(spark, sf)
@@ -1111,9 +1107,7 @@ def q158(spark: SparkSession, sf: str) -> DataFrame:
     if wkey not in _STAGE_CACHE:
         root = tempfile.mkdtemp(prefix="diachronic_snapstream_")
         base = spark.read.schema(WIKI_REVISIONS).parquet(base_path)
-        snapshot_state(base).repartition("day").write.mode(
-            "overwrite"
-        ).partitionBy("day").parquet(f"{root}/pristine")
+        refresh_snapshot_store(spark, f"{root}/pristine", base)
         _STAGE_CACHE[wkey] = root
     root = _STAGE_CACHE[wkey]
     store = f"{root}/store"
@@ -1247,13 +1241,6 @@ def q177(spark: SparkSession, sf: str) -> DataFrame:
         F.col("n_captures").cast("bigint").alias("n_captures"),
         F.col("f.text").alias("kept_text"),
     ).orderBy("canonical_url")
-
-
-@atexit.register
-def _cleanup_ephemeral_dirs() -> None:
-    for path in _EPHEMERAL_DIRS:
-        shutil.rmtree(path, ignore_errors=True)
-    _EPHEMERAL_DIRS.clear()
 
 
 STREAM_QUERIES = {

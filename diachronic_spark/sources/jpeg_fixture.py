@@ -184,18 +184,6 @@ def _canonical_huff(symbols: set) -> tuple:
     return counts, syms, table
 
 
-def _encode_component_blocks(comp_blocks, q):
-    """Quantize every block; return (quantized blocks, symbol stats)."""
-    out = []
-    for blocks in comp_blocks:  # list of (by, bx, spatial)
-        qb = []
-        for by, bx, b in blocks:
-            shifted = [[b[r][c] - 128.0 for c in range(8)] for r in range(8)]
-            qb.append((by, bx, _quantize(_fdct(shifted), q)))
-        out.append(qb)
-    return out
-
-
 def generate_jpegs() -> list:
     """One dict per image: geometry, the assembled ``blob``, and the
     per-component quantized coefficient planes + metadata the truth

@@ -51,7 +51,6 @@ K_FOLDER = 0x0B
 K_CODERS_UNPACK_SIZE = 0x0C
 K_NUM_UNPACK_STREAM = 0x0D
 K_EMPTY_STREAM = 0x0E
-K_EMPTY_FILE = 0x0F
 K_NAME = 0x11
 K_ENCODED_HEADER = 0x17
 

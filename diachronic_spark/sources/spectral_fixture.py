@@ -32,7 +32,6 @@ CLIPS_DIR = os.path.join(_HERE, "fixtures", "wav_spectral")
 TRUTH_PATH = os.path.join(_HERE, "fixtures", "spectral_truth.parquet")
 
 RATE = 8000
-N_FFT_MAX = 512
 
 
 def _sine(n: int, bin_k: int, amp: float, n_fft: int, phase: float = 0.0):

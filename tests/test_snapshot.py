@@ -422,3 +422,84 @@ def test_store_refresh_delta_with_only_new_days(spark, tmp_path):
     got = spark.read.parquet(path).count()
     want = snapshot_state(revs.unionByName(delta)).count()
     assert got == want
+
+
+def test_daily_snapshot_is_one_shuffle_on_page_and_day(spark):
+    """The window dedup plans exactly one Exchange, a hash partitioning
+    on (page_id, calendar day of timestamp) — the one-shuffle shape
+    the dump ingest and q21 run."""
+    import re
+
+    from diachronic_spark.sources.wiki_fixture import FIXTURE_PATH
+
+    revs = spark.read.schema(WIKI_REVISIONS).parquet(FIXTURE_PATH)
+    plan = daily_snapshot(revs)._jdf.queryExecution().executedPlan(
+    ).toString()
+    assert plan.count("Exchange") == 1, plan
+    m = re.search(r"Exchange hashpartitioning\(page_id#\d+L?, (\w+#\d+)", plan)
+    assert m, plan
+    assert re.search(
+        rf"cast\(timestamp#\d+ as date\) AS {re.escape(m.group(1))}\b", plan
+    ), plan
+
+
+def test_store_refresh_seeds_a_missing_store(spark, tmp_path):
+    """A missing root is an empty store: the refresh writes every day
+    of the delta, one file per day, with the same rows as
+    ``snapshot_state`` written ``partitionBy("day")``."""
+    import os
+
+    from diachronic_spark.operators.snapshot import (
+        STORE_READ_SCHEMA,
+        refresh_snapshot_store,
+        snapshot_state,
+    )
+    from diachronic_spark.sources.wiki_fixture import FIXTURE_PATH
+
+    revs = spark.read.schema(WIKI_REVISIONS).parquet(FIXTURE_PATH)
+    path = str(tmp_path / "new" / "store")
+    touched = refresh_snapshot_store(spark, path, revs)
+    state = snapshot_state(revs)
+    assert touched == sorted(
+        r.day for r in state.select("day").distinct().collect()
+    )
+    ref = str(tmp_path / "ref")
+    state.write.partitionBy("day").parquet(ref)
+
+    def rows(p):
+        return sorted(
+            tuple(r) for r in spark.read.schema(STORE_READ_SCHEMA).parquet(p)
+            .collect()
+        )
+
+    assert rows(path) == rows(ref)
+    days = [d for d in os.listdir(path) if d.startswith("day=")]
+    assert sorted(days) == sorted(
+        d for d in os.listdir(ref) if d.startswith("day=")
+    )
+    assert sorted(days) == [f"day={d}" for d in touched]
+    for d in days:
+        files = [
+            f for f in os.listdir(os.path.join(path, d))
+            if f.endswith(".parquet")
+        ]
+        assert len(files) == 1, (d, files)
+
+
+def test_read_snapshot_store_missing_root_names_the_path(spark, tmp_path):
+    from diachronic_spark.operators.snapshot import read_snapshot_store
+
+    path = str(tmp_path / "no_such_store")
+    with pytest.raises(FileNotFoundError, match="no_such_store"):
+        read_snapshot_store(spark, path)
+
+
+def test_read_snapshot_store_without_day_dirs_names_the_path(
+    spark, tmp_path
+):
+    from diachronic_spark.operators.snapshot import read_snapshot_store
+
+    path = tmp_path / "empty_store"
+    (path / "not_a_day").mkdir(parents=True)
+    with pytest.raises(ValueError, match="empty_store"):
+        read_snapshot_store(spark, str(path))

@@ -1,15 +1,15 @@
 #!/usr/bin/env python
-"""Round-10 optimization profiler.
+"""Per-query profiler.
 
 For each declared query (or a named subset) under the bench's exact
 session/caching setup: time best-of-k via toPandas (the bench action),
 count the Spark jobs the query launches (job-group tracking — each job
 pays the per-job dispatch floor, so job count is the first-order cost
 model for sub-second queries), and dump the EXECUTED formatted plan
-(post-AQE) to plans/r10/<q>_<tag>.txt.
+(post-AQE) to plans/profile/<q>_<tag>.txt.
 
 Usage:
-  python tools/r10_profile.py [--tag before] [--plans-only] [q158 q136 ...]
+  python tools/profile_queries.py [--tag before] [--plans-only] [q158 q136 ...]
 """
 
 from __future__ import annotations
@@ -41,11 +41,11 @@ def main() -> None:
     out_dir = os.path.join(
         os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
         "plans",
-        "r10",
+        "profile",
     )
     os.makedirs(out_dir, exist_ok=True)
 
-    spark = get_spark("diachronic-spark-r10-profile")
+    spark = get_spark("diachronic-spark-profile")
     spark.sparkContext.setLogLevel("ERROR")
     for t in TABLES:
         load(spark, sf_dir, t).persist().count()

@@ -46,7 +46,6 @@ from pyspark.sql import functions as F  # noqa: E402
 
 from diachronic_spark.operators.snapshot import (  # noqa: E402
     refresh_snapshot_store,
-    snapshot_state,
 )
 from diachronic_spark.plans.streaming_queries import (  # noqa: E402
     _link_data_copy_markers,
@@ -87,9 +86,7 @@ def measure(spark, n_copies: int, root: str) -> tuple[float, int, int]:
         FIXTURE_PATH
     ).filter(F.col("rev_seq") % 5 == 0)
     pristine = f"{root}/pristine_{n_copies}"
-    snapshot_state(base).repartition("day").write.mode(
-        "overwrite"
-    ).partitionBy("day").parquet(pristine)
+    refresh_snapshot_store(spark, pristine, base)
     state_rows = spark.read.parquet(pristine).count()
     n_parts = len(
         [d for d in os.listdir(pristine) if d.startswith("day=")]
