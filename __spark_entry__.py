@@ -225,7 +225,10 @@ _ADJUDICATED_ROUND: dict[str, int] = {
 # Changed since their last driver row: the round-11 optimization edits
 # (q184 and q188, also edited, have no driver row yet and so lead the
 # order as never-checked), and q109, whose snapshot_from_dumps parse now
-# runs one file per task and rejects pages without their own <id>.
+# runs one file per task and rejects pages without their own <id>; its
+# .7z stream now decodes in bounded pieces read in linear time, and
+# revision timestamps must match YYYY-MM-DDTHH:MM:SSZ (parsed with
+# fromisoformat instead of strptime).
 # q21 and q105 run daily_snapshot, now written through the shared
 # winner rule in operators/snapshot.py (q109/q121/q152/q155/q158,
 # also on the rewritten snapshot paths, are listed already).

@@ -102,7 +102,14 @@ def _margin_sql(w: list[float]) -> str:
     the Column form builds, emitted as ONE parser call instead of ~40
     py4j Column constructions. ``repr``-formatted double literals with
     the ``D`` suffix round-trip bit-exactly through the SQL parser
-    (shortest-roundtrip decimal → Double.parseDouble)."""
+    (shortest-roundtrip decimal → Double.parseDouble). A non-finite
+    weight has no SQL literal (``infD`` does not parse) and raises
+    ``ValueError`` naming its index."""
+    for i, v in enumerate(w):
+        if not math.isfinite(v):
+            raise ValueError(
+                f"weight {i} is {v!r}; margins need finite weights"
+            )
     warr = ", ".join(f"{v!r}D" for v in w)
     return (
         f"aggregate(zip_with(array({warr}), x, (wi, xi) -> wi * xi), "

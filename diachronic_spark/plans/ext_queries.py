@@ -2470,9 +2470,9 @@ def q124(spark: SparkSession, sf: str) -> DataFrame:
     path = _Q124_DIRS[sf]
     zordered = zorder_layout(li, ["l_partkey", "l_suppkey"], n_files=8, bits=4)
     zordered.write.mode("overwrite").parquet(path)
-    # read back with the projected columns' own schema (a parquet
-    # subset read): no footer inference at plan time, and the scan is
-    # pruned to exactly the adjudicated columns (guide §6)
+    # read back with the written columns' own schema: no footer
+    # inference at plan time (guide §6); the scan's column pruning
+    # comes from the .select(*cols) below, not from this schema
     back = spark.read.schema(li.schema).parquet(path)
     return (
         back.filter((F.col("l_partkey") <= 200) & (F.col("l_suppkey") <= 10))

@@ -17,9 +17,14 @@ Scope (loud errors outside it):
   graphs.
 
 Reading is STREAMING: ``SevenZipReader.chunks()`` yields decompressed
-chunks folder by folder without materializing the payload, so a
-multi-GB dump flows through the XML iterparse at O(dict_size) memory —
-the same shape as the reference's subprocess pipe.
+pieces folder by folder without materializing the payload. Each piece
+is at most ``_CHUNK`` (1 MiB) at any compression ratio — the codec is
+asked for bounded output and drained before more packed input is fed
+— so a multi-GB dump flows through the XML iterparse in
+O(dict_size + _CHUNK) memory, the same shape as the reference's
+subprocess pipe. ``open_7z_stream`` wraps the pieces in
+``_ChunkStream``, whose reads copy only the bytes they return, so the
+whole read is linear in the payload at any read size.
 
 ``write_7z`` builds single-file archives (used by the fixture tool and
 the round-trip tests; the reference never writes 7z, so this exists as
@@ -33,7 +38,7 @@ import io
 import lzma
 import zlib
 from dataclasses import dataclass, field
-from typing import Iterator
+from typing import Callable, Iterator
 
 SIGNATURE = bytes([0x37, 0x7A, 0xBC, 0xAF, 0x27, 0x1C])
 
@@ -303,11 +308,18 @@ def _lzma2_dict_size(props: bytes) -> int:
     return (2 | (code & 1)) << (code // 2 + 11)
 
 
-def _folder_decoder(coder: _Coder):
-    """(feed(bytes) -> bytes, flush() -> bytes) incremental decoder."""
+def _copy(data: bytes) -> Iterator[bytes]:
+    yield data
+
+
+def _folder_decoder(coder: _Coder) -> Callable[[bytes], Iterator[bytes]]:
+    """Incremental ``decode(packed) -> pieces`` for one coder. A stdlib
+    codec is asked for at most ``_CHUNK`` bytes a call and drained
+    until it needs more input (or its stream ends), so no piece exceeds
+    ``_CHUNK`` at any compression ratio."""
     cid = coder.coder_id
     if cid == CODER_COPY:
-        return (lambda b: b), (lambda: b"")
+        return _copy
     if cid == CODER_LZMA2:
         dec = lzma.LZMADecompressor(
             format=lzma.FORMAT_RAW,
@@ -318,19 +330,28 @@ def _folder_decoder(coder: _Coder):
                 }
             ],
         )
-        return dec.decompress, (lambda: b"")
-    if cid == CODER_LZMA1:
+    elif cid == CODER_LZMA1:
         dec = lzma.LZMADecompressor(
             format=lzma.FORMAT_RAW, filters=[_lzma1_filter(coder.props)]
         )
-        return dec.decompress, (lambda: b"")
-    if cid == CODER_BZIP2:
+    elif cid == CODER_BZIP2:
         dec = bz2.BZ2Decompressor()
-        return dec.decompress, (lambda: b"")
-    raise SevenZipError(
-        f"unsupported 7z coder id {cid.hex()}; supported: Copy, "
-        "LZMA1, LZMA2, BZip2"
-    )
+    else:
+        raise SevenZipError(
+            f"unsupported 7z coder id {cid.hex()}; supported: Copy, "
+            "LZMA1, LZMA2, BZip2"
+        )
+
+    def decode(data: bytes) -> Iterator[bytes]:
+        out = dec.decompress(data, _CHUNK)
+        while True:
+            if out:
+                yield out
+            if dec.needs_input or dec.eof:
+                return
+            out = dec.decompress(b"", _CHUNK)
+
+    return decode
 
 
 class SevenZipReader:
@@ -422,7 +443,7 @@ class SevenZipReader:
                 pack_offsets.append(off)
                 off += s
             for f in si.folders:
-                feed, flush = _folder_decoder(f.coders[0])
+                decode = _folder_decoder(f.coders[0])
                 fh.seek(pack_offsets[f.pack_index])
                 remaining_in = sum(
                     si.pack_sizes[f.pack_index : f.pack_index + f.n_pack_streams]
@@ -434,19 +455,13 @@ class SevenZipReader:
                     if not data:
                         raise SevenZipError("truncated packed stream")
                     remaining_in -= len(data)
-                    out = feed(data)
-                    if out:
+                    for out in decode(data):
                         out = out[:remaining_out]
                         remaining_out -= len(out)
                         if verify or f.crc is not None:
                             crc = zlib.crc32(out, crc)
-                        yield out
-                tail = flush()[:remaining_out]
-                if tail:
-                    remaining_out -= len(tail)
-                    if verify or f.crc is not None:
-                        crc = zlib.crc32(tail, crc)
-                    yield tail
+                        if out:
+                            yield out
                 if remaining_out != 0:
                     raise SevenZipError(
                         f"{self.path}: folder decoded short by "
@@ -463,24 +478,30 @@ class SevenZipReader:
 
 
 class _ChunkStream(io.RawIOBase):
-    """File-like over an iterator of byte chunks (feeds ET.iterparse)."""
+    """File-like over an iterator of byte pieces (feeds ET.iterparse).
+
+    Holds a ``memoryview`` of the current piece and a read offset, so
+    each ``readinto`` copies only the bytes it returns: linear in the
+    payload, whatever the read size."""
 
     def __init__(self, it: Iterator[bytes]):
         self._it = it
-        self._buf = b""
+        self._view = memoryview(b"")
+        self._pos = 0
 
     def readable(self) -> bool:
         return True
 
     def readinto(self, b) -> int:
-        while not self._buf:
+        while self._pos == len(self._view):
             nxt = next(self._it, None)
             if nxt is None:
                 return 0
-            self._buf = nxt
-        n = min(len(b), len(self._buf))
-        b[:n] = self._buf[:n]
-        self._buf = self._buf[n:]
+            self._view = memoryview(nxt)
+            self._pos = 0
+        n = min(len(b), len(self._view) - self._pos)
+        b[:n] = self._view[self._pos : self._pos + n]
+        self._pos += n
         return n
 
 

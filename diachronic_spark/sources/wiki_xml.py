@@ -27,6 +27,7 @@ import bz2
 import datetime as dt
 import gzip
 import io
+import re
 import shutil
 import subprocess
 from typing import Callable, Iterator
@@ -44,6 +45,21 @@ REVISION_SQL_SCHEMA = (
     "page_id bigint, rev_seq int, namespace string, title string, "
     "timestamp timestamp, text string"
 )
+
+
+# The one timestamp form MediaWiki exports (UTC, whole seconds, "Z").
+_TS_RE = re.compile(r"\d{4}-\d\d-\d\dT\d\d:\d\d:\d\dZ", re.ASCII)
+
+
+def _parse_timestamp(text: str) -> dt.datetime:
+    """Naive UTC datetime of a dump ``<timestamp>``; the reference
+    strips the ``Z`` and parses the seconds (main.py:153). Any other
+    form raises ``ValueError`` naming it."""
+    if _TS_RE.fullmatch(text) is None:
+        raise ValueError(
+            f"revision timestamp {text!r} is not YYYY-MM-DDTHH:MM:SSZ"
+        )
+    return dt.datetime.fromisoformat(text[:-1])
 
 
 PAGE_XML_SCHEMA = (
@@ -135,7 +151,7 @@ def iterparse_revisions(stream) -> Iterator[tuple]:
             tx_el = elem.find(f"{ns}text")
             ts = None
             if ts_el is not None and ts_el.text:
-                ts = dt.datetime.strptime(ts_el.text[:-1], "%Y-%m-%dT%H:%M:%S")
+                ts = _parse_timestamp(ts_el.text)
             revs.append((ts, tx_el.text if tx_el is not None else None))
             elem.clear()
         elif tag == "page":

@@ -13,6 +13,7 @@ import zlib
 import pytest
 
 from diachronic_spark.sources.sevenzip import (
+    _CHUNK,
     SevenZipError,
     SevenZipReader,
     open_7z_stream,
@@ -171,6 +172,38 @@ def test_7z_streaming_chunked_reads():
             break
         acc += c
     assert acc == (FIXTURES / "wiki_tiny.xml").read_bytes()
+
+
+@pytest.fixture(scope="module", params=["lzma2", "copy"])
+def big_archive(request, tmp_path_factory):
+    """A payload decoding to > 3 x _CHUNK; the LZMA2 one packs to a few
+    KB, so a single packed read decodes to all of it at once."""
+    payload = (FIXTURES / "wiki_tiny.xml").read_bytes()
+    payload *= 3 * _CHUNK // len(payload) + 2
+    p = tmp_path_factory.mktemp("big") / f"big_{request.param}.7z"
+    write_7z(str(p), "dump.xml", payload, codec=request.param)
+    return str(p), payload
+
+
+@pytest.mark.parametrize("size", [13, 16384, -1])
+def test_7z_stream_reads_large_payload_back(big_archive, size):
+    """open_7z_stream returns the exact payload at any read size, across
+    piece boundaries."""
+    path, payload = big_archive
+    s = open_7z_stream(path)
+    parts = []
+    while c := s.read(size):
+        parts.append(c)
+    assert b"".join(parts) == payload
+
+
+def test_7z_pieces_bounded_at_any_ratio(big_archive):
+    """No decoded piece exceeds _CHUNK, whatever the compression ratio:
+    decoder memory stays constant per file."""
+    path, payload = big_archive
+    sizes = [len(c) for c in SevenZipReader(path).chunks()]
+    assert sum(sizes) == len(payload)
+    assert max(sizes) <= _CHUNK
 
 
 def test_7z_roundtrip_property_random_payloads(tmp_path):

@@ -1,6 +1,9 @@
 """Quality-classifier training (q194): learnability floor,
 determinism, and the exact-gradient contract."""
 
+import math
+
+import pytest
 from pyspark.sql import functions as F
 
 
@@ -56,3 +59,14 @@ def test_classifier_empty_text_docs_are_bias_only(spark):
     ).collect()
     assert all(r.weight == r.weight for r in out)  # no NaN
     assert out[0].n_docs == 3
+
+
+@pytest.mark.parametrize("bad", [math.inf, -math.inf, math.nan])
+def test_margin_sql_rejects_non_finite_weights(bad):
+    """inf/nan weights have no SQL double literal (``infD`` does not
+    parse): the margin text refuses them, naming the weight's index."""
+    from diachronic_spark.operators.classifier import _margin_sql
+
+    assert "0.5D" in _margin_sql([0.5, -1.0, 2.0])
+    with pytest.raises(ValueError, match="weight 2 is"):
+        _margin_sql([0.5, -1.0, bad, 3.0])

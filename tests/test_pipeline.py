@@ -280,6 +280,49 @@ def test_page_without_own_id_fails_loudly(spark, xml_paths, tmp_path):
     assert revisions.count() == parse_dump_files(spark, [pa]).count()
 
 
+@pytest.mark.parametrize(
+    "stamp",
+    ["2024-03-01T08:00:00+01:00", "2024-03-01T08:00:00", "2024-03-01 08:00:00Z"],
+)
+def test_timestamp_not_in_export_form_fails_loudly(
+    spark, xml_paths, tmp_path, stamp
+):
+    """Only MediaWiki's YYYY-MM-DDTHH:MM:SSZ is read: any other
+    <timestamp> (an offset, no Z) fails the file, naming the value,
+    instead of losing its last character and parsing the rest."""
+    import io
+    import re
+
+    from diachronic_spark.sources.wiki_xml import (
+        iterparse_revisions,
+        parse_dump_files,
+        parse_dump_files_with_status,
+        split_parse_failures,
+    )
+
+    xml = ORPHAN_XML.replace(
+        "<title>Orphan</title><ns>0</ns>",
+        "<title>Odd</title><ns>0</ns><id>8</id>",
+    ).replace("2024-03-01T09:00:00Z", stamp)
+    named = re.escape(f"timestamp '{stamp}'")
+    with pytest.raises(ValueError, match=named):
+        list(iterparse_revisions(io.BytesIO(xml.encode())))
+
+    bad = tmp_path / "odd_ts.xml"
+    bad.write_text(xml, encoding="utf-8")
+    with pytest.raises(Exception, match=named):
+        parse_dump_files(spark, [str(bad)]).collect()
+
+    _rows, pa, _pb = xml_paths
+    revisions, failures = split_parse_failures(
+        parse_dump_files_with_status(spark, [pa, str(bad)])
+    )
+    fail_rows = failures.collect()
+    assert [r.src_path for r in fail_rows] == [str(bad)]
+    assert fail_rows[0].error.startswith("ValueError: revision timestamp")
+    assert revisions.count() == parse_dump_files(spark, [pa]).count()
+
+
 def test_pipeline_config_from_yaml(tmp_path):
     """conf.yml layout parity (reference diachronic/conf.yml:1-15) with
     safe_load and call-time I/O."""

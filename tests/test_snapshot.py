@@ -225,7 +225,7 @@ def test_incremental_merge_equals_full_recompute(spark):
     )
 
 
-def test_incremental_merge_never_shuffles_the_state(spark):
+def test_incremental_merge_never_shuffles_the_state(spark, tmp_path):
     """The scale contract: the state side of the refresh must appear
     under NO Exchange — only the delta-sized re-argmin shuffles. The
     (key, day) membership joins must be broadcast."""
@@ -243,14 +243,8 @@ def test_incremental_merge_never_shuffles_the_state(spark):
     state = snapshot_state(base)
     # materialize the state (the maintained table would be at rest);
     # the plan under test is the refresh over it
-    state.write.mode("overwrite").parquet(
-        str(spark.conf.get("spark.local.dir", "/tmp"))
-        + "/q152_state_plan_test"
-    )
-    at_rest = spark.read.parquet(
-        str(spark.conf.get("spark.local.dir", "/tmp"))
-        + "/q152_state_plan_test"
-    )
+    state.write.parquet(str(tmp_path / "state"))
+    at_rest = spark.read.parquet(str(tmp_path / "state"))
     plan = merge_snapshot_state(at_rest, delta)._jdf.queryExecution(
     ).executedPlan().toString()
     # the two membership joins run broadcast (state never shuffles)
