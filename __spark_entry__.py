@@ -117,6 +117,14 @@ _ADJUDICATED_ROUND: dict[str, int] = {
     **{"q162": 10, "q172": 10, "q173": 10, "q175": 10, "q176": 10,
        "q178": 10, "q180": 10, "q182": 10},
     **{f"q{i}": 10 for i in range(183, 206) if i not in (184, 188)},
+    # round 11 checked q184/q188 (first rows, scalar tokens_text), the
+    # r11-stale q117/q133/q139/q148, and the rotation tail q27-q51/
+    # q53-q65/q96/q125/q143-q146 — CORRECTNESS_r11.json: 50/50 green.
+    **{f"q{i}": 11 for i in range(27, 52)},
+    **{f"q{i}": 11 for i in range(53, 66)},
+    **{f"q{i}": 11 for i in range(143, 147)},
+    **{"q96": 11, "q117": 11, "q125": 11, "q133": 11, "q139": 11,
+       "q148": 11, "q184": 11, "q188": 11},
 }
 # New this round (tier 0, never adjudicated): q183 (BYTE-level BPE
 # token counts — GPT-2 byte↔unicode table derived from the published
@@ -223,20 +231,30 @@ _ADJUDICATED_ROUND: dict[str, int] = {
 # (q175); the default whitespace path is expression-identical but
 # the function was edited.
 # Changed since their last driver row: the round-11 optimization edits
-# (q184 and q188, also edited, have no driver row yet and so lead the
-# order as never-checked), and q109, whose snapshot_from_dumps parse now
-# runs one file per task and rejects pages without their own <id>; its
-# .7z stream now decodes in bounded pieces read in linear time, and
-# revision timestamps must match YYYY-MM-DDTHH:MM:SSZ (parsed with
-# fromisoformat instead of strptime).
+# not re-checked in round 11 (q117/q133/q139/q148 were, green, and left
+# the set; q133 is back below), and q109, whose snapshot_from_dumps parse now runs one file
+# per task and rejects pages without their own <id>; its .7z stream
+# now decodes in bounded pieces read in linear time through the stdlib
+# reader only (the 7z-binary branch is gone), and revision timestamps
+# must match YYYY-MM-DDTHH:MM:SSZ (parsed with fromisoformat instead
+# of strptime).
 # q21 and q105 run daily_snapshot, now written through the shared
 # winner rule in operators/snapshot.py (q109/q121/q152/q155/q158,
 # also on the rewritten snapshot paths, are listed already).
+# Session state scoped (session.scoped_conf / scoped_sql): q40, q48,
+# q65 and q91-q100 bind their tables as scoped_sql arguments instead
+# of fixed-name temp views; the stream drains (q101-q104, q106, q107,
+# q110, q134, q137, q177, q197) set their confs through scoped_conf
+# and drop their sink view; the driver loops of the classifier
+# (q194/q197/q204), k-means (q141) and global_running_sum (q133/q198/
+# q204) and read_partitions (q121/q155/q158) run under scoped_conf.
 _STALE: tuple[str, ...] = (
-    "q21", "q80", "q105", "q109", "q111", "q112", "q113", "q117",
-    "q121", "q124", "q133", "q136", "q139", "q141", "q148", "q152",
-    "q155", "q156", "q158", "q186", "q187", "q189", "q194", "q195",
-    "q197", "q204",
+    "q21", "q40", "q48", "q65", "q80",
+    *(f"q{i}" for i in range(91, 101)),
+    "q101", "q102", "q103", "q104", "q105", "q106", "q107", "q109",
+    "q110", "q111", "q112", "q113", "q121", "q124", "q133", "q134",
+    "q136", "q137", "q141", "q152", "q155", "q156", "q158", "q177",
+    "q186", "q187", "q189", "q194", "q195", "q197", "q198", "q204",
 )
 
 

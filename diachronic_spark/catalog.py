@@ -13,6 +13,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from .schemas import EVENTS_RAW, TABLE_SCHEMAS
+from .session import DEFAULT_CONFS
 
 TABLES = tuple(TABLE_SCHEMAS)
 
@@ -24,9 +25,12 @@ TABLES = tuple(TABLE_SCHEMAS)
 # round-trip wrong through the footer sniffing below (pyarrow reports
 # INT96 as timestamp[ns]).
 _REQUIRED_SQL_CONFS = {
-    "spark.sql.session.timeZone": "UTC",
-    "spark.sql.legacy.parquet.nanosAsLong": "true",
-    "spark.sql.parquet.outputTimestampType": "TIMESTAMP_MICROS",
+    k: DEFAULT_CONFS[k]
+    for k in (
+        "spark.sql.session.timeZone",
+        "spark.sql.legacy.parquet.nanosAsLong",
+        "spark.sql.parquet.outputTimestampType",
+    )
 }
 
 # Performance defaults for a vanilla external session: AQE
@@ -41,10 +45,13 @@ _REQUIRED_SQL_CONFS = {
 # for a genuinely unset conf (never the engine default), which makes
 # it the exact "did anyone choose a value" probe.
 _PERF_SQL_CONFS = {
-    "spark.sql.adaptive.enabled": "true",
-    "spark.sql.execution.arrow.pyspark.enabled": "true",
-    "spark.sql.execution.arrow.maxRecordsPerBatch": "65536",
-    "spark.sql.adaptive.advisoryPartitionSizeInBytes": "16m",
+    k: DEFAULT_CONFS[k]
+    for k in (
+        "spark.sql.adaptive.enabled",
+        "spark.sql.execution.arrow.pyspark.enabled",
+        "spark.sql.execution.arrow.maxRecordsPerBatch",
+        "spark.sql.adaptive.advisoryPartitionSizeInBytes",
+    )
 }
 
 _PERF_APPLIED: set[str] = set()

@@ -26,43 +26,10 @@ cross-session global and test isolation required manual release()).
 
 from __future__ import annotations
 
-from contextlib import contextmanager
-
 from pyspark import StorageLevel
 from pyspark.sql import DataFrame
 
 _LIVE: dict[tuple[str, str], DataFrame] = {}
-
-
-@contextmanager
-def no_aqe(spark):
-    """Run a driver-loop's BOUNDED-OUTPUT aggregate actions without
-    AQE (OPTIMIZATION r11, guide §1.2 step 3 / §2.4).
-
-    Iterative operators (classifier GD, k-means Lloyd passes) collect
-    a KB-sized state per iteration through one or two trivial
-    exchanges. AQE materializes every exchange as its own query
-    stage — a separate Spark JOB per stage — so each iteration paid
-    2-4 job dispatches where one suffices. There is nothing for AQE
-    to adapt in these actions at ANY scale: map sides still do
-    partial aggregation over however many partitions the persisted
-    working set has, reduce sides are k-row, and there is no join
-    whose strategy could change. Scope is strictly the caller's own
-    actions (saved/restored), so session-level AQE behavior elsewhere
-    is untouched."""
-    key = "spark.sql.adaptive.enabled"
-    try:
-        old = spark.conf.get(key)
-    except Exception:
-        old = None
-    spark.conf.set(key, "false")
-    try:
-        yield
-    finally:
-        if old is None:
-            spark.conf.unset(key)
-        else:
-            spark.conf.set(key, old)
 
 
 def _app_id(df: DataFrame) -> str:

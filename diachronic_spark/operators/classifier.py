@@ -44,13 +44,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from ..functions import md5_prefix32
-
-
-# the trainer's bounded-output iteration collects run under
-# _cache.no_aqe — each GD iteration returns ONE row of BIGINT sums
-# through a single trivial exchange, so AQE's per-stage jobs were
-# pure dispatch overhead (see no_aqe's docstring)
-from ._cache import no_aqe as _no_aqe
+from ..session import scoped_conf, scoped_sql
 
 
 def _featurize(
@@ -151,8 +145,9 @@ def train_quality_weights(
     columns that EACH embedded the full margin fold, ~300 py4j round
     trips ≈ 0.25 s/iteration of pure driver Python, plus a duplicated
     margin subtree per sum through the analyzer. Each iteration is
-    now ONE ``spark.sql`` statement over a temp view of the persisted
-    featurized relation, with ``err`` computed once in a subquery
+    now ONE ``spark.sql`` statement over the persisted featurized
+    relation (a ``{feat}`` argument of ``session.scoped_sql``, so no
+    view outlives the call), with ``err`` computed once in a subquery
     (the arithmetic per value is unchanged and value-identical:
     same ops, same order, same IEEE doubles — weight literals are
     ``repr``-round-tripped through the parser, which is exact).
@@ -176,9 +171,15 @@ def train_quality_weights(
     m10, grid = 10.0**10, 1e9
     w = [0.0] * dim
     spark = docs.sparkSession
-    view = "diachronic_classifier_feat"
-    feat.createOrReplaceTempView(view)
-    with _no_aqe(spark):
+    # The iteration collects run with AQE off, as do the other driver
+    # loops (k-means Lloyd passes, the running-sum partition totals):
+    # each action collects a KB-sized state through one or two trivial
+    # exchanges, and AQE runs every exchange as its own query stage, a
+    # separate Spark job, so an iteration paid 2-4 job dispatches where
+    # one suffices. There is nothing for AQE to adapt in these actions
+    # at any scale: map sides still aggregate over every partition,
+    # reduce sides are k-row, and no join strategy can change.
+    with scoped_conf(spark, {"spark.sql.adaptive.enabled": "false"}):
         for it in range(iterations):
             # per-slot gradient term: floor(x[i] * err * 1e9 + 0.5)
             # as BIGINT — byte-identical to the former Column form
@@ -192,10 +193,12 @@ def train_quality_weights(
             )
             if it == 0:
                 terms += ", count(1) AS __n"
-            sums = spark.sql(
+            sums = scoped_sql(
+                spark,
                 f"SELECT {terms} FROM (SELECT x, y - greatest(0.0D, "
                 f"least(1.0D, 0.25D * {_margin_sql(w)} + 0.5D)) AS "
-                f"err FROM {view})"
+                "err FROM {feat})",
+                feat=feat,
             ).collect()[0]
             if it == 0:
                 n = int(sums["__n"])
@@ -214,9 +217,11 @@ def train_quality_weights(
         if n is None:  # iterations == 0: count alone
             n = feat.count()
         if with_eval:
-            n_correct = spark.sql(
+            n_correct = scoped_sql(
+                spark,
                 f"SELECT sum(CASE WHEN ({_margin_sql(w)} >= 0) = "
-                f"(y = 1.0D) THEN 1 ELSE 0 END) AS c FROM {view}"
+                "(y = 1.0D) THEN 1 ELSE 0 END) AS c FROM {feat}",
+                feat=feat,
             ).collect()[0]["c"]
         else:
             n_correct = None

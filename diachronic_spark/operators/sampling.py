@@ -21,6 +21,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.types import DecimalType, DoubleType
 
 from ..functions import md5_prefix32
+from ..session import scoped_conf
 from ._cache import managed_persist
 
 
@@ -221,10 +222,8 @@ def global_running_sum(
         cache_key,
     )
     # bounded-output collect (≤ n_partitions rows) runs without AQE:
-    # one job instead of one per query stage (_cache.no_aqe)
-    from ._cache import no_aqe
-
-    with no_aqe(spark):
+    # one job instead of one per query stage
+    with scoped_conf(spark, {"spark.sql.adaptive.enabled": "false"}):
         totals = {
             r["__pid"]: (r["__t"], r["__n"])
             for r in part.groupBy("__pid")

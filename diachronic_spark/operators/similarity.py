@@ -21,6 +21,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from ..functions import cosine_similarity
+from ..session import scoped_conf
 from ._cache import managed_persist
 
 
@@ -300,10 +301,8 @@ def kmeans(
 
     # bounded-output fit collects (k x dim doubles per iteration) run
     # without AQE: one job per Lloyd pass instead of one per query
-    # stage (see _cache.no_aqe)
-    from ._cache import no_aqe
-
-    with no_aqe(spark):
+    # stage
+    with scoped_conf(spark, {"spark.sql.adaptive.enabled": "false"}):
         cent_rows = _init_cents(v, k, round_to).collect()
         for _ in range(n_iter):
             cent_rows = _mean_cents(

@@ -22,7 +22,6 @@ Two forms:
 from __future__ import annotations
 
 import datetime as dt
-from contextlib import contextmanager
 from typing import Iterable
 
 import pandas as pd
@@ -30,33 +29,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from ..schemas import REVISIONS
-
-
-@contextmanager
-def _driver_side_listing(spark, n_paths: int):
-    """Scope-raise the parallel-partition-discovery threshold so a
-    bounded, already-known path list is listed driver-side
-    (OPTIMIZATION r11, guide §6 file listing): when ``read_partitions``
-    passes more than 32 explicit directories, Spark otherwise launches
-    a DISTRIBUTED listing job — one task per directory — to discover
-    files the driver could stat in microseconds each on a local
-    filesystem. The threshold is restored on exit so unrelated scans
-    keep the default behavior (which IS right for huge object-store
-    layouts)."""
-    key = "spark.sql.sources.parallelPartitionDiscovery.threshold"
-    try:
-        old = spark.conf.get(key)
-    except Exception:
-        old = None
-    spark.conf.set(key, str(max(n_paths + 1, 32)))
-    try:
-        yield
-    finally:
-        if old is None:
-            spark.conf.unset(key)
-        else:
-            spark.conf.set(key, old)
-
+from ..session import scoped_conf
 
 DEFAULT_EPOCH = dt.datetime(2001, 1, 15)  # reference conf.yml:7
 
@@ -252,7 +225,16 @@ def read_partitions(
     if not names:
         return None
     dirs = [f"{path}/{n}" for n in sorted(names)]
-    with _driver_side_listing(spark, len(dirs)):
+    # OPTIMIZATION r11 (guide §6 file listing): past 32 explicit
+    # directories Spark lists them in a distributed job, one task per
+    # directory, for files the driver stats in microseconds each on a
+    # local filesystem. Raise the threshold for this read only; other
+    # scans keep the default, which is right for huge object stores.
+    threshold = str(max(len(dirs) + 1, 32))
+    with scoped_conf(
+        spark,
+        {"spark.sql.sources.parallelPartitionDiscovery.threshold": threshold},
+    ):
         return (
             spark.read.schema(schema).option("basePath", path).parquet(*dirs)
         )

@@ -1452,10 +1452,10 @@ FROM daily ORDER BY d
 
 # q91-q98: the SAME SQL templates as the Spark side (TPCH_SQL),
 # formatted with bare table names — byte-identical query text.
-from .ext_queries import TPCH_SQL  # noqa: E402
+from .ext_queries import TPCH_SQL, TPCH_TABLES  # noqa: E402
 
 for _qid, _tpl in TPCH_SQL.items():
-    EXT_ORACLE[_qid] = _tpl.format(v="")
+    EXT_ORACLE[_qid] = _tpl.format(**{t: t for t in TPCH_TABLES})
 
 # q105: the XML-pipeline end-to-end check — same snapshot SQL shape as
 # q21, computed over the raw revision rows of fixtures/wiki_tiny.xml

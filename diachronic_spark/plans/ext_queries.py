@@ -39,6 +39,7 @@ from ..operators import incremental as INC
 from ..operators import quality as Q
 from ..operators import stats as ST
 from ..operators.merge import snapshot_diff
+from ..session import scoped_sql
 
 
 def _r2(c) -> F.Column:
@@ -349,22 +350,24 @@ def q39(spark: SparkSession, sf: str) -> DataFrame:
 
 
 # --- q40: GROUPING SETS via the SQL surface (A5) ---------------------------
-# Exercises spark.sql() + temp-view registration — the engine's SQL
-# entry point — with an explicit grouping-set list (not rollup/cube).
+# Exercises spark.sql() over a DataFrame argument (session.scoped_sql)
+# — the engine's SQL entry point — with an explicit grouping-set list
+# (not rollup/cube).
 def q40(spark: SparkSession, sf: str) -> DataFrame:
-    load(spark, sf, "lineitem").createOrReplaceTempView("lineitem_v")
-    return spark.sql(
+    return scoped_sql(
+        spark,
         """
         SELECT coalesce(l_returnflag, 'ALL') AS l_returnflag,
                coalesce(l_linestatus, 'ALL') AS l_linestatus,
                count(*) AS n_items,
                round(sum(l_quantity), 2) AS sum_qty,
                CAST(grouping_id() AS INT) AS gid
-        FROM lineitem_v
+        FROM {lineitem}
         GROUP BY GROUPING SETS ((l_returnflag), (l_linestatus),
                                 (l_returnflag, l_linestatus))
         ORDER BY gid, l_returnflag, l_linestatus
-        """
+        """,
+        lineitem=load(spark, sf, "lineitem"),
     )
 
 
@@ -530,17 +533,18 @@ def q47(spark: SparkSession, sf: str) -> DataFrame:
 # decorrelates the subquery into an aggregate + join — free optimizer
 # machinery the reference never had; pinned here through spark.sql.
 def q48(spark: SparkSession, sf: str) -> DataFrame:
-    load(spark, sf, "customer").createOrReplaceTempView("customer_v")
-    return spark.sql(
+    return scoped_sql(
+        spark,
         """
         SELECT c_custkey, c_nationkey,
                round(c_acctbal, 2) AS c_acctbal
-        FROM customer_v c
+        FROM {customer} c
         WHERE c_acctbal > (SELECT avg(c2.c_acctbal) * 1.5
-                           FROM customer_v c2
+                           FROM {customer} c2
                            WHERE c2.c_nationkey = c.c_nationkey)
         ORDER BY c_custkey
-        """
+        """,
+        customer=load(spark, sf, "customer"),
     )
 
 
@@ -983,20 +987,20 @@ def q64(spark: SparkSession, sf: str) -> DataFrame:
 # UnionLoop re-evaluates the anchor/step subtrees per iteration — the
 # three-way union of joins re-ran at EVERY recursion level (measured:
 # 47 warm jobs, the most of any declared query). Building the edge
-# relation once, persisting it, and referencing it from the recursion
-# via a temp view makes each level one cached-scan join. The relation
-# is identical to the former CTE, so the result (and the DuckDB
-# oracle, which keeps the single-statement form) is unchanged.
+# relation once, persisting it, and passing it to the recursion as a
+# DataFrame argument makes each level one cached-scan join. The
+# relation is identical to the former CTE, so the result (and the
+# DuckDB oracle, which keeps the single-statement form) is unchanged.
 Q65_EDGES_SQL = """
 SELECT 1000000000000 + r_regionkey AS src,
        2000000000000 + n_nationkey AS dst
-FROM region JOIN nation ON n_regionkey = r_regionkey
+FROM {region} JOIN {nation} ON n_regionkey = r_regionkey
 UNION ALL
 SELECT 2000000000000 + n_nationkey, 3000000000000 + c_custkey
-FROM nation JOIN customer ON c_nationkey = n_nationkey
+FROM {nation} JOIN {customer} ON c_nationkey = n_nationkey
 UNION ALL
 SELECT 3000000000000 + c_custkey, 4000000000000 + o_orderkey
-FROM customer JOIN orders ON o_custkey = c_custkey
+FROM {customer} JOIN {orders} ON o_custkey = c_custkey
 """
 
 # The oracle keeps the ORIGINAL single-statement recursive form (the
@@ -1031,24 +1035,27 @@ ORDER BY r_name, depth
 Q65_SQL = """
 WITH RECURSIVE reach(root, node, depth) AS (
   SELECT 1000000000000 + r_regionkey, 1000000000000 + r_regionkey, 0
-  FROM region
+  FROM {region}
   UNION ALL
   SELECT r.root, e.dst, r.depth + 1
-  FROM reach r JOIN q65_edges e ON r.node = e.src
+  FROM reach r JOIN {edges} e ON r.node = e.src
 )
 SELECT r_name, depth, count(*) AS n_nodes
-FROM reach JOIN region ON root = 1000000000000 + r_regionkey
+FROM reach JOIN {region} ON root = 1000000000000 + r_regionkey
 GROUP BY r_name, depth
 ORDER BY r_name, depth
 """
 
 
 def q65(spark: SparkSession, sf: str) -> DataFrame:
-    for t in ["region", "nation", "customer", "orders"]:
-        load(spark, sf, t).createOrReplaceTempView(t)
-    edges = managed_persist(spark.sql(Q65_EDGES_SQL), "q65.edges")
-    edges.createOrReplaceTempView("q65_edges")
-    return spark.sql(Q65_SQL)
+    t = {
+        n: load(spark, sf, n)
+        for n in ["region", "nation", "customer", "orders"]
+    }
+    edges = managed_persist(
+        scoped_sql(spark, Q65_EDGES_SQL, **t), "q65.edges"
+    )
+    return scoped_sql(spark, Q65_SQL, region=t["region"], edges=edges)
 
 
 # --- q66: ordered funnel (view → click → purchase) -------------------------
@@ -1783,10 +1790,11 @@ def q90(spark: SparkSession, sf: str) -> DataFrame:
 # --- q91-q98: TPC-H-shaped relational suite (SQL surface) ------------------
 # Classic TPC-H query shapes adapted to the fixture's column subset
 # (no partsupp/shipmode/container), run from ONE SQL template per
-# query: the Spark side formats table suffix "_v" (temp views), the
-# oracle formats "" — byte-identical SQL otherwise, so the engines are
-# compared on the exact same query text. Revenue aggregates/rankings
-# use exact integer cents×100 ("e4") so no float ever decides a row.
+# query: each table is a placeholder ({orders}); the Spark side passes
+# the loaded DataFrames, the oracle the bare table names, so the
+# engines are compared on the exact same query text. Revenue
+# aggregates/rankings use exact integer cents×100 ("e4") so no float
+# ever decides a row.
 # Shapes exercised: EXISTS (q91), two-sided nation exchange (q92),
 # conditional-share over a 7-table star (q93), integer-ranked top-k
 # (q94), correlated scalar avg subquery (q95), monthly promo share
@@ -1800,10 +1808,10 @@ _REV_E4 = (
 TPCH_SQL: dict[str, str] = {
     "q91": """
         SELECT o.o_orderpriority, count(*) AS n_orders
-        FROM orders{v} o
+        FROM {orders} o
         WHERE o.o_orderdate >= TIMESTAMP '1996-01-01 00:00:00'
           AND o.o_orderdate <  TIMESTAMP '1997-01-01 00:00:00'
-          AND EXISTS (SELECT 1 FROM lineitem{v} l
+          AND EXISTS (SELECT 1 FROM {lineitem} l
                       WHERE l.l_orderkey = o.o_orderkey
                         AND l.l_returnflag = 'R')
         GROUP BY o.o_orderpriority ORDER BY o.o_orderpriority
@@ -1812,12 +1820,12 @@ TPCH_SQL: dict[str, str] = {
         WITH e4 AS (
           SELECT n1.n_name AS supp_nation, n2.n_name AS cust_nation,
                  CAST(year(l.l_shipdate) AS BIGINT) AS yr, {_REV_E4} AS rev_e4
-          FROM lineitem{{v}} l
-          JOIN orders{{v}} o ON l.l_orderkey = o.o_orderkey
-          JOIN customer{{v}} c ON o.o_custkey = c.c_custkey
-          JOIN supplier{{v}} s ON l.l_suppkey = s.s_suppkey
-          JOIN nation{{v}} n1 ON s.s_nationkey = n1.n_nationkey
-          JOIN nation{{v}} n2 ON c.c_nationkey = n2.n_nationkey
+          FROM {{lineitem}} l
+          JOIN {{orders}} o ON l.l_orderkey = o.o_orderkey
+          JOIN {{customer}} c ON o.o_custkey = c.c_custkey
+          JOIN {{supplier}} s ON l.l_suppkey = s.s_suppkey
+          JOIN {{nation}} n1 ON s.s_nationkey = n1.n_nationkey
+          JOIN {{nation}} n2 ON c.c_nationkey = n2.n_nationkey
           WHERE (n1.n_name = 'NATION_1' AND n2.n_name = 'NATION_2')
              OR (n1.n_name = 'NATION_2' AND n2.n_name = 'NATION_1'))
         SELECT supp_nation, cust_nation, yr,
@@ -1830,14 +1838,14 @@ TPCH_SQL: dict[str, str] = {
         WITH rev AS (
           SELECT CAST(year(o.o_orderdate) AS BIGINT) AS yr, n1.n_name AS supp_nation,
                  {_REV_E4} AS rev_e4
-          FROM part{{v}} p
-          JOIN lineitem{{v}} l ON p.p_partkey = l.l_partkey
-          JOIN orders{{v}} o ON l.l_orderkey = o.o_orderkey
-          JOIN customer{{v}} c ON o.o_custkey = c.c_custkey
-          JOIN nation{{v}} n2 ON c.c_nationkey = n2.n_nationkey
-          JOIN region{{v}} r ON n2.n_regionkey = r.r_regionkey
-          JOIN supplier{{v}} s ON l.l_suppkey = s.s_suppkey
-          JOIN nation{{v}} n1 ON s.s_nationkey = n1.n_nationkey
+          FROM {{part}} p
+          JOIN {{lineitem}} l ON p.p_partkey = l.l_partkey
+          JOIN {{orders}} o ON l.l_orderkey = o.o_orderkey
+          JOIN {{customer}} c ON o.o_custkey = c.c_custkey
+          JOIN {{nation}} n2 ON c.c_nationkey = n2.n_nationkey
+          JOIN {{region}} r ON n2.n_regionkey = r.r_regionkey
+          JOIN {{supplier}} s ON l.l_suppkey = s.s_suppkey
+          JOIN {{nation}} n1 ON s.s_nationkey = n1.n_nationkey
           WHERE r.r_name = 'EUROPE' AND p.p_type = 'PROMO')
         SELECT yr,
                round(100e0 * sum(CASE WHEN supp_nation = 'NATION_3'
@@ -1849,10 +1857,10 @@ TPCH_SQL: dict[str, str] = {
         WITH r AS (
           SELECT c.c_custkey, c.c_name, n.n_name,
                  sum({_REV_E4}) AS rev_e4
-          FROM customer{{v}} c
-          JOIN orders{{v}} o ON c.c_custkey = o.o_custkey
-          JOIN lineitem{{v}} l ON o.o_orderkey = l.l_orderkey
-          JOIN nation{{v}} n ON c.c_nationkey = n.n_nationkey
+          FROM {{customer}} c
+          JOIN {{orders}} o ON c.c_custkey = o.o_custkey
+          JOIN {{lineitem}} l ON o.o_orderkey = l.l_orderkey
+          JOIN {{nation}} n ON c.c_nationkey = n.n_nationkey
           WHERE l.l_returnflag = 'R'
           GROUP BY c.c_custkey, c.c_name, n.n_name)
         SELECT c_custkey, c_name, n_name,
@@ -1862,19 +1870,19 @@ TPCH_SQL: dict[str, str] = {
     "q95": """
         SELECT round(sum(CAST(round(l.l_extendedprice * 100) AS BIGINT))
                      / 100e0 / 7e0, 2) + 0.0 AS avg_yearly
-        FROM lineitem{v} l
-        JOIN part{v} p ON p.p_partkey = l.l_partkey
+        FROM {lineitem} l
+        JOIN {part} p ON p.p_partkey = l.l_partkey
         WHERE p.p_type = 'SMALL'
           AND l.l_quantity < (SELECT 0.5 * avg(l2.l_quantity)
-                              FROM lineitem{v} l2
+                              FROM {lineitem} l2
                               WHERE l2.l_partkey = l.l_partkey)
     """,
     "q96": f"""
         WITH e AS (
           SELECT CAST(month(l.l_shipdate) AS BIGINT) AS mo,
                  p.p_type = 'PROMO' AS is_promo, {_REV_E4} AS rev_e4
-          FROM lineitem{{v}} l
-          JOIN part{{v}} p ON l.l_partkey = p.p_partkey
+          FROM {{lineitem}} l
+          JOIN {{part}} p ON l.l_partkey = p.p_partkey
           WHERE l.l_shipdate >= TIMESTAMP '1998-01-01 00:00:00'
             AND l.l_shipdate <  TIMESTAMP '1999-01-01 00:00:00')
         SELECT mo,
@@ -1885,8 +1893,8 @@ TPCH_SQL: dict[str, str] = {
     "q97": f"""
         SELECT CAST(floor((sum({_REV_E4}) + 50) / 100e0) AS BIGINT)
                  / 100e0 AS revenue
-        FROM lineitem{{v}} l
-        JOIN part{{v}} p ON p.p_partkey = l.l_partkey
+        FROM {{lineitem}} l
+        JOIN {{part}} p ON p.p_partkey = l.l_partkey
         WHERE (p.p_brand = 'Brand#1' AND p.p_size BETWEEN 1 AND 15
                AND l.l_quantity BETWEEN 1 AND 11)
            OR (p.p_brand = 'Brand#2' AND p.p_size BETWEEN 1 AND 10
@@ -1898,13 +1906,13 @@ TPCH_SQL: dict[str, str] = {
         WITH pos AS (SELECT sum(CAST(round(c_acctbal * 100) AS BIGINT))
                             AS s_cents,
                             count(*) AS n
-                     FROM customer{v} WHERE c_acctbal > 0.0)
+                     FROM {customer} WHERE c_acctbal > 0.0)
         SELECT c.c_custkey % 10 AS bucket, count(*) AS n_cust,
                round(sum(c.c_acctbal), 2) + 0.0 AS total_bal
-        FROM customer{v} c CROSS JOIN pos
+        FROM {customer} c CROSS JOIN pos
         WHERE CAST(round(c.c_acctbal * 100) AS BIGINT) * pos.n
               > pos.s_cents
-          AND NOT EXISTS (SELECT 1 FROM orders{v} o
+          AND NOT EXISTS (SELECT 1 FROM {orders} o
                           WHERE o.o_custkey = c.c_custkey
                             AND o.o_orderdate >=
                                 TIMESTAMP '1998-01-01 00:00:00')
@@ -1912,13 +1920,13 @@ TPCH_SQL: dict[str, str] = {
     """,
     "q99": """
         WITH i AS (
-          SELECT c_nationkey AS nk FROM customer{v}
+          SELECT c_nationkey AS nk FROM {customer}
           INTERSECT ALL
-          SELECT s_nationkey FROM supplier{v}),
+          SELECT s_nationkey FROM {supplier}),
         x AS (
-          SELECT c_nationkey AS nk FROM customer{v}
+          SELECT c_nationkey AS nk FROM {customer}
           EXCEPT ALL
-          SELECT s_nationkey FROM supplier{v})
+          SELECT s_nationkey FROM {supplier})
         SELECT 'except_all' AS op, nk, count(*) AS n
         FROM x GROUP BY nk
         UNION ALL
@@ -1928,24 +1936,27 @@ TPCH_SQL: dict[str, str] = {
     "q100": """
         SELECT n.n_name, t.c_name,
                round(t.c_acctbal, 2) + 0.0 AS c_acctbal
-        FROM nation{v} n,
-        LATERAL (SELECT c_name, c_acctbal FROM customer{v} c
+        FROM {nation} n,
+        LATERAL (SELECT c_name, c_acctbal FROM {customer} c
                  WHERE c.c_nationkey = n.n_nationkey
                  ORDER BY c_acctbal DESC, c_name LIMIT 2) t
         ORDER BY n.n_name, c_acctbal DESC, c_name
     """,
 }
 
-_TPCH_TABLES = (
+
+TPCH_TABLES = (
     "region nation customer supplier part orders lineitem".split()
 )
 
 
 def _tpch_sql_query(qid: str):
+    template = TPCH_SQL[qid]
+    tables = [t for t in TPCH_TABLES if f"{{{t}}}" in template]
+
     def run(spark: SparkSession, sf: str) -> DataFrame:
-        for t in _TPCH_TABLES:
-            load(spark, sf, t).createOrReplaceTempView(f"{t}_v")
-        return spark.sql(TPCH_SQL[qid].format(v="_v"))
+        frames = {t: load(spark, sf, t) for t in tables}
+        return scoped_sql(spark, template, **frames)
 
     run.__name__ = qid
     run.__doc__ = (

@@ -59,6 +59,7 @@ from pyspark.sql import functions as F
 
 from .. import functions as fn
 from ..catalog import load
+from ..session import scoped_conf
 from ..streaming.events import (
     dedup_within_watermark,
     read_event_stream,
@@ -226,28 +227,26 @@ def _link_data_copy_markers(src: str, dst: str) -> None:
 def _drain_to_table(
     stream: DataFrame,
     mode: str,
-    await_no_data_batch: bool = False,
     n_state_partitions: int | None = None,
     sink_key: str = "q",
     require_single_batch: bool = False,
     no_data_batches: bool = True,
 ) -> DataFrame:
-    """Drain a stream into a memory sink and return the sink table.
+    """Drain a stream into a memory sink and return the sink's rows.
 
     The drain runs under ``Trigger.AvailableNow`` + ``awaitTermination``:
     the query processes everything available, runs the trailing no-data
     micro-batch (watermark finalization) when enabled, commits, and
     terminates — so by the time awaitTermination returns, every row the
     run will ever emit (including append-mode windows finalized by
-    watermark advancement, ``await_no_data_batch``) is in the sink. This
-    replaces the r2-era processAllAvailable + progress-poll +
-    count-stability dance, which paid extra RPC round-trips and sleeps
-    per drain (VERDICT r3 item 1).
+    watermark advancement) is in the sink. This replaces the r2-era
+    processAllAvailable + progress-poll + count-stability dance, which
+    paid extra RPC round-trips and sleeps per drain (VERDICT r3 item 1).
 
-    The sink is a PER-QUERY named table (``sink_key``), re-registered
-    on reuse — uuid-per-run names would accumulate a full result copy
-    in driver memory for every drain in the process (bench best-of-N,
-    scaling curves; ADVICE r2).
+    The memory sink registers its rows as the temp view
+    ``stream_sink_<sink_key>``. The returned DataFrame reads the sink
+    itself, so the view is dropped before returning: no view outlives
+    the drain, and the catalog pins no drain's result copy (ADVICE r2).
 
     ``require_single_batch``: queries whose parity depends on all
     staged files landing in one micro-batch (watermark cutoffs, state
@@ -260,37 +259,35 @@ def _drain_to_table(
     micro-batch for drains whose RESULT doesn't depend on it (complete
     mode; stateful/dedup append, where rows emit in the data batch) —
     one fewer batch commit per drain, measured ~0.3-0.9 s each at
-    sf0.1. Queries that await watermark finalization (q102) must keep
-    it on (``await_no_data_batch`` documents that dependency).
+    sf0.1. Queries whose result needs watermark finalization keep it
+    on: q102's append-mode windows and q137's outer-join nulls are
+    emitted only by the trailing no-data batch that advances the
+    watermark past them.
+
+    ``n_state_partitions`` sets the shuffle width the stream starts
+    with (state partitioning is fixed per checkpoint). Both settings
+    hold for the drain only; batch queries see the session's own.
     """
     spark = stream.sparkSession
     name = f"stream_sink_{sink_key}"
-    prev_sp = spark.conf.get("spark.sql.shuffle.partitions")
-    prev_ndb = spark.conf.get("spark.sql.streaming.noDataMicroBatches.enabled")
+    confs: dict[str, str] = {}
     if not no_data_batches:
-        spark.conf.set("spark.sql.streaming.noDataMicroBatches.enabled", "false")
+        confs["spark.sql.streaming.noDataMicroBatches.enabled"] = "false"
     if n_state_partitions is not None:
-        # captured at stream start (state partitioning is fixed per
-        # checkpoint); restored in the outer finally so batch queries
-        # see the session default even if start() itself fails
-        spark.conf.set("spark.sql.shuffle.partitions", n_state_partitions)
-    try:
-        # release the previous drain's result before re-registering
-        spark.catalog.dropTempView(name)
-    except Exception:
-        pass
+        confs["spark.sql.shuffle.partitions"] = str(n_state_partitions)
     q = None
     ckpt = _checkpoint_dir(sink_key)
     try:
-        q = (
-            stream.writeStream.format("memory")
-            .queryName(name)
-            .outputMode(mode)
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
+        with scoped_conf(spark, confs):
+            q = (
+                stream.writeStream.format("memory")
+                .queryName(name)
+                .outputMode(mode)
+                .option("checkpointLocation", ckpt)
+                .trigger(availableNow=True)
+                .start()
+            )
+            q.awaitTermination()
         if require_single_batch:
             data_batches = sum(
                 1 for p in q.recentProgress if p["numInputRows"] > 0
@@ -301,15 +298,12 @@ def _drain_to_table(
                     f"{data_batches} micro-batches; watermark/state "
                     "parity assumes single-batch ingestion"
                 )
+        return spark.table(name)
     finally:
         if q is not None and q.isActive:
             q.stop()
-        spark.conf.set("spark.sql.shuffle.partitions", prev_sp)
-        spark.conf.set(
-            "spark.sql.streaming.noDataMicroBatches.enabled", prev_ndb
-        )
+        spark.catalog.dropTempView(name)
         shutil.rmtree(ckpt, ignore_errors=True)
-    return spark.table(name)
 
 
 _WM_CUTOFF_CACHE: dict[str, int] = {}
@@ -352,8 +346,7 @@ def q102(spark: SparkSession, sf: str) -> DataFrame:
         read_event_stream(spark, src), width="1 hour", watermark=WATERMARK
     )
     sink = _drain_to_table(
-        agg, "append", await_no_data_batch=True,
-        n_state_partitions=STREAM_STATE_PARTITIONS,
+        agg, "append", n_state_partitions=STREAM_STATE_PARTITIONS,
         sink_key="q102", require_single_batch=True,
     )
     # Spark tracks event-time watermarks in MILLISECONDS: the final
@@ -808,7 +801,7 @@ def q137(spark: SparkSession, sf: str) -> DataFrame:
     )
     sink = _drain_to_table(
         joined, "append", sink_key="q137", require_single_batch=True,
-        await_no_data_batch=True, n_state_partitions=4,
+        n_state_partitions=4,
     )
     cut = _q137_cutoff_ms(spark, sf) - Q137_MARGIN_MS
     return (

@@ -17,8 +17,10 @@ Design notes (100 TB):
 from __future__ import annotations
 
 import os
+import uuid
+from contextlib import contextmanager
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
 
 DEFAULT_CONFS: dict[str, str] = {
     "spark.sql.adaptive.enabled": "true",
@@ -81,21 +83,6 @@ DEFAULT_CONFS: dict[str, str] = {
 }
 
 
-# Opt-in for web-scale streaming state (millions of keys): the RocksDB
-# provider spills state to local disk instead of holding it on-heap.
-# Not a default — the in-memory provider is faster for test-sized state.
-# Usage: get_spark(extra_confs=STREAMING_SCALE_CONFS).
-STREAMING_SCALE_CONFS: dict[str, str] = {
-    "spark.sql.streaming.stateStore.providerClass": (
-        "org.apache.spark.sql.execution.streaming."
-        "state.RocksDBStateStoreProvider"
-    ),
-    "spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled": (
-        "true"
-    ),
-}
-
-
 def get_spark(
     app_name: str = "diachronic-spark",
     master: str | None = None,
@@ -118,3 +105,52 @@ def get_spark(
     for k, v in confs.items():
         builder = builder.config(k, v)
     return builder.getOrCreate()
+
+
+@contextmanager
+def scoped_conf(spark: SparkSession, confs: dict[str, str]):
+    """Set SQL ``confs`` on ``spark`` for the body of the ``with``, then
+    put back each key's previous value, or unset it if it had none, also
+    when the body raises. This is the one place the engine changes a
+    session's SQL conf (``catalog.ensure_confs`` aside, which fills in
+    the engine defaults on a session built elsewhere).
+
+    ``spark.conf.get(k, None)`` returns None only for a key no one set
+    (never the engine default), so an unset key is unset again rather
+    than pinned to its default."""
+    old = {k: spark.conf.get(k, None) for k in confs}
+    try:
+        for k, v in confs.items():
+            spark.conf.set(k, v)
+        yield
+    finally:
+        for k, v in old.items():
+            if v is None:
+                spark.conf.unset(k)
+            else:
+                spark.conf.set(k, v)
+
+
+def scoped_sql(
+    spark: SparkSession, text: str, **frames: DataFrame
+) -> DataFrame:
+    """``spark.sql(text)`` with each ``{name}`` in ``text`` bound to the
+    DataFrame ``frames[name]``, leaving no view behind.
+
+    Each frame is a temp view under a uuid name only while the statement
+    is analysed, as in PySpark's own ``spark.sql(text, **frames)``. That
+    form drops its views with ``Catalog.dropTempView``, which also
+    uncaches every cached plan equal to the view's: a persisted frame
+    (q65's edges, the classifier's features, a table the bench
+    persisted) would be evicted by the query that reads it. These views
+    are dropped from the session catalog directly, which leaves the
+    cache alone."""
+    names = {k: f"_scoped_{uuid.uuid4().hex}" for k in frames}
+    catalog = spark._jsparkSession.sessionState().catalog()
+    try:
+        for k, df in frames.items():
+            df.createTempView(names[k])
+        return spark.sql(text.format(**names))
+    finally:
+        for name in names.values():
+            catalog.dropTempView(name)

@@ -1,12 +1,12 @@
 """Pure-stdlib .7z container reader/writer (SURVEY §2.1 S4).
 
 The reference decompresses wiki dumps by piping an external binary —
-``7z e -so file.7z`` (reference main.py:172-173). Executors in this
-repo's target environment may not have p7zip installed, so
-``wiki_xml._open_stream`` falls back to this module: a from-spec
-implementation of the 7z container format (7-Zip's public
-DOC/7zFormat.txt) whose actual decoding is done by stdlib codecs —
-``lzma`` (raw LZMA1/LZMA2 filters), ``bz2``, or passthrough Copy.
+``7z e -so file.7z`` (reference main.py:172-173). Executors need not
+have p7zip installed: ``wiki_xml._open_stream`` reads every .7z dump
+through this module, a from-spec implementation of the 7z container
+format (7-Zip's public DOC/7zFormat.txt) whose actual decoding is
+done by stdlib codecs — ``lzma`` (raw LZMA1/LZMA2 filters), ``bz2``,
+or passthrough Copy.
 
 Scope (loud errors outside it):
 - single-coder folders (Copy 0x00, LZMA1 0x030101, LZMA2 0x21,

@@ -12,10 +12,10 @@ form distributes the same work two ways:
 2. ``parse_dump_files``: a work-queue DataFrame of file paths fanned
    out via ``mapInPandas`` — each task streams one file through an
    incremental XML parse (same lxml-style event loop, constant
-   memory). This is the path for codecs Spark can't read (7z): the
-   task shells out to ``7z e -so`` exactly like the reference when the
-   binary exists; plain/bz2/gz fall back to Python codecs so the
-   pipeline is testable in this container (no p7zip here).
+   memory). This is the path for codecs Spark can't read (7z): where
+   the reference pipes ``7z e -so``, the task streams the archive
+   through the stdlib 7z reader (sources/sevenzip.py, CRC-checked), so
+   no executor needs p7zip; plain/bz2/gz use Python codecs.
 
 Both yield the flat revision schema (page_id, rev_seq, namespace,
 title, timestamp, text) feeding operators.snapshot.daily_snapshot.
@@ -28,8 +28,6 @@ import datetime as dt
 import gzip
 import io
 import re
-import shutil
-import subprocess
 from typing import Callable, Iterator
 
 import pandas as pd
@@ -37,6 +35,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..schemas import WIKI_REVISIONS
+from .sevenzip import open_7z_stream
 
 # MediaWiki export namespace (reference diachronic/conf.yml:6).
 MEDIAWIKI_NS = "http://www.mediawiki.org/xml/export-0.10/"
@@ -106,19 +105,14 @@ def read_pages_xml(spark: SparkSession, path: str) -> DataFrame:
 def _open_stream(path: str):
     """Decompressed byte stream for one dump file.
 
-    7z: external binary piped exactly like the reference (main.py:173)
-    when installed (the fast C path); otherwise the pure-stdlib
-    container reader (sources/sevenzip.py — lzma/bz2 codecs, streaming,
-    CRC-verified), so the path is executable on binary-less executors.
-    bz2/gz: Python codecs; anything else: raw bytes.
+    7z: the pure-stdlib container reader (sources/sevenzip.py — lzma/bz2
+    codecs, streaming, CRC-verified) in place of the reference's
+    ``7z e -so`` pipe (main.py:173), so a corrupt archive fails with
+    its path and no executor needs p7zip. bz2/gz: Python codecs;
+    anything else: raw bytes.
     """
     if path.endswith(".7z"):
-        if shutil.which("7z") is None:
-            from .sevenzip import open_7z_stream
-
-            return open_7z_stream(path)
-        proc = subprocess.Popen(["7z", "e", "-so", path], stdout=subprocess.PIPE)
-        return proc.stdout
+        return open_7z_stream(path)
     if path.endswith(".bz2"):
         return bz2.open(path, "rb")
     if path.endswith(".gz"):

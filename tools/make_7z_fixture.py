@@ -1,7 +1,7 @@
 """Build fixtures/wiki_tiny.7z — a minimal single-file .7z archive (Copy
-codec, no compression) so the reference's 7z decompress pipe (reference
-main.py:172-173 → wiki_xml._open_stream's ``7z e -so``) has an in-repo
-artifact to run against wherever a 7z binary exists.
+codec, no compression) so the reference's 7z decompress step (reference
+main.py:172-173, read here by wiki_xml._open_stream through
+sources/sevenzip.py) has an in-repo artifact to run against.
 
 The container this repo is developed in has neither p7zip nor py7zr, so
 the archive is written directly from the public 7z format spec
