@@ -35,6 +35,7 @@ from ..operators import sketches as SK
 from ..operators import graph as G
 from ..operators._cache import fixture_df, managed_persist
 from ._presentation import sort_small
+from ._scratch import restore_tree, run_dir, scratch_dir
 from ..operators import incremental as INC
 from ..operators import quality as Q
 from ..operators import stats as ST
@@ -2046,16 +2047,8 @@ def q109(spark: SparkSession, sf: str) -> DataFrame:
 # +200000): the first set must be caught, the second must survive. The
 # oracle replays the full md5-minhash banding + exact shingle jaccard
 # for both corpora in SQL.
-_MINHASH_INDEX_CACHE: dict[str, str] = {}
-
-
 def _minhash_index(spark: SparkSession, sf: str) -> str:
-    if sf not in _MINHASH_INDEX_CACHE:
-        import atexit
-        import shutil
-        import tempfile
-
-        path = tempfile.mkdtemp(prefix="diachronic_minhash_idx_")
+    def build(path: str) -> None:
         D.write_minhash_index(
             load(spark, sf, "documents").select("doc_id", "text"), path
         )
@@ -2069,9 +2062,8 @@ def _minhash_index(spark: SparkSession, sf: str) -> str:
         for root_, _dirs, files_ in os.walk(path):
             for f_ in files_:
                 os.chmod(os.path.join(root_, f_), 0o444)
-        atexit.register(shutil.rmtree, path, ignore_errors=True)
-        _MINHASH_INDEX_CACHE[sf] = path
-    return _MINHASH_INDEX_CACHE[sf]
+
+    return scratch_dir(f"minhash_idx:{sf}", build)
 
 
 def q112(spark: SparkSession, sf: str) -> DataFrame:
@@ -2095,9 +2087,6 @@ def q112(spark: SparkSession, sf: str) -> DataFrame:
 # reference's upload-then-skip membership update (main.py:60-71). The
 # oracle replays the whole loop in SQL: probe, survivor set, band/
 # shingle union, second probe.
-_APPENDED_INDEX_CACHE: dict[str, str] = {}
-
-
 def _q113_batch(spark: SparkSession, sf: str) -> DataFrame:
     """The q112 batch: 50 near-dups (+100000) + 50 novel (+200000)."""
     docs = load(spark, sf, "documents").select("doc_id", "text")
@@ -2120,24 +2109,20 @@ def _appended_index(spark: SparkSession, sf: str) -> str:
     (later q112 runs must still see the pre-append state), and the
     append happens exactly once so repeated q113 runs are
     deterministic."""
-    if sf not in _APPENDED_INDEX_CACHE:
-        import atexit
-        import shutil
-        import tempfile
+    import shutil
 
-        src = _minhash_index(spark, sf)
-        path = tempfile.mkdtemp(prefix="diachronic_minhash_idx2_")
-        shutil.rmtree(path)
-        shutil.copytree(src, path)
-        atexit.register(shutil.rmtree, path, ignore_errors=True)
+    src = _minhash_index(spark, sf)
+
+    def build(path: str) -> None:
+        shutil.copytree(src, path, dirs_exist_ok=True)
         batch = _q113_batch(spark, sf)
         ann = D.dedup_against_index(spark, batch, src, threshold=0.5)
         survivors = batch.join(
             ann.filter(F.col("survived")).select("doc_id"), "doc_id"
         )
         D.append_to_minhash_index(survivors, path)
-        _APPENDED_INDEX_CACHE[sf] = path
-    return _APPENDED_INDEX_CACHE[sf]
+
+    return scratch_dir(f"minhash_idx_appended:{sf}", build)
 
 
 def q113(spark: SparkSession, sf: str) -> DataFrame:
@@ -2290,10 +2275,7 @@ def q120(spark: SparkSession, sf: str) -> DataFrame:
 # splits) all change the answer. The oracle is the pre-write
 # selection: round-trip fidelity is exactly the claim.
 def q121(spark: SparkSession, sf: str) -> DataFrame:
-    import tempfile
-
     from ..pipeline import PipelineConfig, write_snapshots
-    from .streaming_queries import _EPHEMERAL_DIRS
 
     ev = load(spark, sf, "events")
     out = (
@@ -2305,8 +2287,7 @@ def q121(spark: SparkSession, sf: str) -> DataFrame:
             "value",
         )
     )
-    path = tempfile.mkdtemp(prefix="diachronic_sink_q121_")
-    _EPHEMERAL_DIRS.append(path)
+    path = run_dir(f"q121:{sf}")
     write_snapshots(
         out,
         path,
@@ -2340,18 +2321,14 @@ def q121(spark: SparkSession, sf: str) -> DataFrame:
 # quotes/commas, ORC type mapping) breaks parity with the direct SQL
 # over the parquet table.
 def q122(spark: SparkSession, sf: str) -> DataFrame:
-    import tempfile
-
     from ..sources.files import read_csv, read_jsonl, read_orc, write_orc
-    from .streaming_queries import _EPHEMERAL_DIRS
 
     d = (
         load(spark, sf, "documents")
         .filter(F.col("doc_id") < 200)
         .select("doc_id", "lang", "text")
     )
-    root = tempfile.mkdtemp(prefix="diachronic_interchange_q122_")
-    _EPHEMERAL_DIRS.append(root)
+    root = run_dir(f"q122:{sf}")
     d.write.mode("overwrite").json(f"{root}/jl")
     # quoteAll + no whitespace trimming on write, multiline on read:
     # embedded commas/quotes/newlines/edge-whitespace all round-trip
@@ -2457,28 +2434,17 @@ def q123(spark: SparkSession, sf: str) -> DataFrame:
 # rewrite must be lossless, so a selective 2-D box scan over the
 # z-ordered copy returns byte-identical rows to the same predicate on
 # the raw table.
-_Q124_DIRS: dict[str, str] = {}
-
-
 def q124(spark: SparkSession, sf: str) -> DataFrame:
-    import tempfile
-
     from ..operators.layout import zorder_layout
-    from .streaming_queries import _EPHEMERAL_DIRS
 
     cols = [
         "l_orderkey", "l_linenumber", "l_partkey", "l_suppkey",
         "l_quantity",
     ]
     li = load(spark, sf, "lineitem").select(*cols)
-    # The layout rewrite runs on EVERY call (it is the operation being
-    # measured), but repeated calls overwrite one per-sf directory —
-    # a fresh mkdtemp per call would accumulate full table copies on
-    # disk for the life of the process.
-    if sf not in _Q124_DIRS:
-        _Q124_DIRS[sf] = tempfile.mkdtemp(prefix="diachronic_zorder_q124_")
-        _EPHEMERAL_DIRS.append(_Q124_DIRS[sf])
-    path = _Q124_DIRS[sf]
+    # the layout rewrite runs on EVERY call: it is the operation being
+    # measured
+    path = run_dir(f"q124:{sf}")
     zordered = zorder_layout(li, ["l_partkey", "l_suppkey"], n_files=8, bits=4)
     zordered.write.mode("overwrite").parquet(path)
     # read back with the written columns' own schema: no footer
@@ -2874,9 +2840,6 @@ def q138(spark: SparkSession, sf: str) -> DataFrame:
 # wrong tombstone scope, a leaked candidate, or an over-deleted band
 # all change the verdicts. Oracle: the same two probes in SQL, phase 1
 # over the corpus minus the deleted id range.
-_TOMBSTONED_INDEX_CACHE: dict[str, str] = {}
-
-
 def _q139_batch(spark: SparkSession, sf: str) -> DataFrame:
     docs = load(spark, sf, "documents").select("doc_id", "text")
     toks = fn.whitespace_tokens(F.col("text"))
@@ -2895,22 +2858,18 @@ def _tombstoned_index(spark: SparkSession, sf: str) -> str:
     """Copy of the corpus index with doc_ids 300-324 tombstoned, built
     once per process (the shared q112 index stays untouched; the
     delete happens exactly once so repeated q139 runs agree)."""
-    if sf not in _TOMBSTONED_INDEX_CACHE:
-        import atexit
-        import shutil
-        import tempfile
+    import shutil
 
-        src = _minhash_index(spark, sf)
-        path = tempfile.mkdtemp(prefix="diachronic_minhash_idx3_")
-        shutil.rmtree(path)
-        shutil.copytree(src, path)
-        atexit.register(shutil.rmtree, path, ignore_errors=True)
+    src = _minhash_index(spark, sf)
+
+    def build(path: str) -> None:
+        shutil.copytree(src, path, dirs_exist_ok=True)
         D.delete_from_minhash_index(
             spark.range(300, 325).select(F.col("id").alias("doc_id")),
             path,
         )
-        _TOMBSTONED_INDEX_CACHE[sf] = path
-    return _TOMBSTONED_INDEX_CACHE[sf]
+
+    return scratch_dir(f"minhash_idx_tombstoned:{sf}", build)
 
 
 def q139(spark: SparkSession, sf: str) -> DataFrame:
@@ -3345,23 +3304,14 @@ def q146(spark: SparkSession, sf: str) -> DataFrame:
 # exists, exactly the real drift sequence).
 
 
-_Q147_DIRS: dict[str, str] = {}
-
-
 def _q147_staged(spark: SparkSession, sf: str) -> str:
-    import tempfile
-
-    from .streaming_queries import _EPHEMERAL_DIRS
-
-    d = load(spark, sf, "documents").select("doc_id", "lang", "text")
-    n_tok = F.size(fn.whitespace_tokens(F.col("text"))).cast("bigint")
     # staged ONCE per (process, sf) — the batches are deterministic
     # and the adjudicated operation is the READ (q147 mergeSchema,
     # q153 explicit schema), so re-writing them per call would only
     # bill redundant write jobs to the scan under test (review r6)
-    if sf not in _Q147_DIRS:
-        root = tempfile.mkdtemp(prefix="diachronic_evolve_q147_")
-        _EPHEMERAL_DIRS.append(root)
+    def build(root: str) -> None:
+        d = load(spark, sf, "documents").select("doc_id", "lang", "text")
+        n_tok = F.size(fn.whitespace_tokens(F.col("text"))).cast("bigint")
         d.filter(F.col("doc_id") < 100).select("doc_id", "text").write.mode(
             "overwrite"
         ).parquet(f"{root}/batch=1")
@@ -3375,8 +3325,8 @@ def _q147_staged(spark: SparkSession, sf: str) -> str:
         ).select(
             "doc_id", "lang", n_tok.alias("n_tok")
         ).write.mode("overwrite").parquet(f"{root}/batch=3")
-        _Q147_DIRS[sf] = root
-    return _Q147_DIRS[sf]
+
+    return scratch_dir(f"q147:{sf}", build)
 
 
 def q147(spark: SparkSession, sf: str) -> DataFrame:
@@ -3401,10 +3351,8 @@ def q147(spark: SparkSession, sf: str) -> DataFrame:
 # the adjudicated operation is the join over them.
 def q148(spark: SparkSession, sf: str) -> DataFrame:
     import re as _re
-    import tempfile
 
     from ..operators.layout import bucketed_join, write_bucketed
-    from .streaming_queries import _EPHEMERAL_DIRS
 
     tag = _re.sub(r"\W", "_", sf)
     lt, rt = f"q148_lineitem_{tag}", f"q148_orders_{tag}"
@@ -3415,8 +3363,7 @@ def q148(spark: SparkSession, sf: str) -> DataFrame:
     if not (
         spark.catalog.tableExists(lt) and spark.catalog.tableExists(rt)
     ):
-        root = tempfile.mkdtemp(prefix="diachronic_bucketed_q148_")
-        _EPHEMERAL_DIRS.append(root)
+        root = run_dir(f"q148:{sf}")
         write_bucketed(
             load(spark, sf, "lineitem").select(
                 "l_orderkey", "l_extendedprice", "l_discount"
@@ -3723,44 +3670,28 @@ def q159(spark: SparkSession, sf: str) -> DataFrame:
 # byte-identical, test-pinned). The adjudicated equality is the full
 # refreshed STORE against a full-recompute oracle, i.e. refresh ≡
 # recompute INCLUDING the disk round-trip.
-_Q155_DIRS: dict[str, str] = {}
-
-
 def q155(spark: SparkSession, sf: str) -> DataFrame:
-    import tempfile
-
     from ..catalog import ensure_confs
     from ..functions import ts_str
     from ..operators.snapshot import refresh_snapshot_store
     from ..schemas import WIKI_REVISIONS
     from ..sources.wiki_fixture import FIXTURE_PATH
 
-    import shutil
-
-    from .streaming_queries import _link_data_copy_markers
-
     ensure_confs(spark)
     revs = spark.read.schema(WIKI_REVISIONS).parquet(FIXTURE_PATH)
     base = revs.filter(F.col("rev_seq") % 5 != 0)
     delta = revs.filter(F.col("rev_seq") % 5 == 0)
-    # one dir per sf reused across runs (the q124 rule: a fresh
-    # mkdtemp per call would accumulate store copies). The PRISTINE
-    # base store is computed once per sf; each run restores it with
-    # the q136 hardlink trick (data files link — the refresh's
-    # dynamic overwrite UNLINKS touched files, never mutates the
-    # pristine inodes; commit markers byte-copy) so every run
+    # The PRISTINE base store is computed once per sf; each run
+    # restores it by hardlink (the refresh's dynamic overwrite UNLINKS
+    # touched files, never mutates the pristine inodes) so every run
     # exercises the pristine-base → pruned-refresh lifecycle at
     # metadata-only restore cost.
-    if sf not in _Q155_DIRS:
-        root = tempfile.mkdtemp(prefix="diachronic_snapstore_q155_")
-        refresh_snapshot_store(spark, f"{root}/pristine", base)
-        _Q155_DIRS[sf] = root
-    root = _Q155_DIRS[sf]
-    path = f"{root}/store"
-    shutil.rmtree(path, ignore_errors=True)
-    shutil.copytree(
-        f"{root}/pristine", path, copy_function=_link_data_copy_markers
+    pristine = scratch_dir(
+        f"q155_pristine:{sf}",
+        lambda p: refresh_snapshot_store(spark, p, base),
     )
+    path = run_dir(f"q155:{sf}")
+    restore_tree(pristine, path)
     refresh_snapshot_store(spark, path, delta)
     # manifest-driven at-rest read (one driver listStatus + write
     # schema, no distributed discovery job — same treatment as q158)
@@ -3786,12 +3717,7 @@ def q155(spark: SparkSession, sf: str) -> DataFrame:
 # GROUP BY over all events. Batches split by event_id % 4 so every
 # merge genuinely collides with existing keys (sum/min/max all
 # exercise the merge path, not the insert path).
-_Q156_DIRS: dict[str, str] = {}
-
-
 def q156(spark: SparkSession, sf: str) -> DataFrame:
-    import tempfile
-
     from ..operators.incremental import agg_state, merge_states
 
     ev = load(spark, sf, "events").select(
@@ -3801,9 +3727,7 @@ def q156(spark: SparkSession, sf: str) -> DataFrame:
         (F.col("event_id") % 4).alias("b"),
     )
     keys = ["event_type", "day"]
-    if sf not in _Q156_DIRS:
-        _Q156_DIRS[sf] = tempfile.mkdtemp(prefix="diachronic_rollup_q156_")
-    root = _Q156_DIRS[sf]
+    root = run_dir(f"q156:{sf}")
     # batch 0 founds the state table at rest
     agg_state(ev.filter(F.col("b") == 0).drop("b"), keys, ["value"]) \
         .write.mode("overwrite").parquet(f"{root}/state_0")
@@ -4655,8 +4579,6 @@ def q183(spark: SparkSession, sf: str) -> DataFrame:
 # collect); assignments shuffle (bucket, id, n_tokens) only; Python
 # stays vocabulary-sized.
 def q184(spark: SparkSession, sf: str) -> DataFrame:
-    import tempfile
-
     from ..catalog import ensure_confs
     from ..operators.bpe import (
         RE_TOKEN_UNI,
@@ -4664,7 +4586,6 @@ def q184(spark: SparkSession, sf: str) -> DataFrame:
     )
     from ..sources.bpe_fixture import load_byte_merges
     from ..sources.c4_fixture import DOCS
-    from .streaming_queries import _EPHEMERAL_DIRS
 
     ensure_confs(spark)
     docs = fixture_df(
@@ -4673,8 +4594,7 @@ def q184(spark: SparkSession, sf: str) -> DataFrame:
     cleaned = T.c4_clean(docs).select(
         "doc_id", F.col("clean_text").alias("text")
     )
-    path = tempfile.mkdtemp(prefix="diachronic_packed_shards_q184_")
-    _EPHEMERAL_DIRS.append(path)
+    path = run_dir(f"q184:{sf}")
     write_packed_shards(
         cleaned,
         load_byte_merges(),
@@ -4885,8 +4805,6 @@ def q187(spark: SparkSession, sf: str) -> DataFrame:
 # replay with the key rendered by the same %04d-%08d rule — the tar
 # layout is a physical representation of the identical relation.
 def q188(spark: SparkSession, sf: str) -> DataFrame:
-    import tempfile
-
     from ..catalog import ensure_confs
     from ..operators.bpe import RE_TOKEN_UNI, build_packed_shards
     from ..sources.bpe_fixture import load_byte_merges
@@ -4895,7 +4813,6 @@ def q188(spark: SparkSession, sf: str) -> DataFrame:
         read_wds_token_shards,
         write_wds_token_shards,
     )
-    from .streaming_queries import _EPHEMERAL_DIRS
 
     ensure_confs(spark)
     docs = fixture_df(
@@ -4912,8 +4829,7 @@ def q188(spark: SparkSession, sf: str) -> DataFrame:
         byte_level=True,
         pretoken_re=RE_TOKEN_UNI,
     )
-    path = tempfile.mkdtemp(prefix="diachronic_wds_tokens_q188_")
-    _EPHEMERAL_DIRS.append(path)
+    path = run_dir(f"q188:{sf}")
     write_wds_token_shards(packs, path)
     back = read_wds_token_shards(spark, path)
     # same scalar token encoding as q184 (it IS the txt member's own
@@ -4943,12 +4859,7 @@ def q188(spark: SparkSession, sf: str) -> DataFrame:
 # shape: the refresh is a segment-count-sized equi-join (never
 # url-scaled); each batch's delta is the same one narrow build
 # shuffle as q185.
-_Q189_DIRS: dict[str, str] = {}
-
-
 def q189(spark: SparkSession, sf: str) -> DataFrame:
-    import tempfile
-
     from ..catalog import ensure_confs
     from ..operators.crawl import (
         build_url_bloom_sharded,
@@ -4970,11 +4881,7 @@ def q189(spark: SparkSession, sf: str) -> DataFrame:
             k=K, m=M, words_per_segment=WPS,
         )
 
-    if sf not in _Q189_DIRS:
-        _Q189_DIRS[sf] = tempfile.mkdtemp(
-            prefix="diachronic_frontier_q189_"
-        )
-    root = _Q189_DIRS[sf]
+    root = run_dir(f"q189:{sf}")
     # the at-rest bloom state layout is build_url_bloom_sharded's own
     # — explicit schema on every state read-back skips parquet footer
     # inference at plan time, 4x per run (OPTIMIZATION r11, guide §6)

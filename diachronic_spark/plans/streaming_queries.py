@@ -49,11 +49,6 @@ log source (Kafka/files) instead of the staged copy.
 
 from __future__ import annotations
 
-import atexit
-import os
-import shutil
-import tempfile
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -67,18 +62,19 @@ from ..streaming.events import (
     sliding_counts,
     tumbling_counts,
 )
+from ._scratch import (
+    checkpoint_dir,
+    restore_tree,
+    run_dir,
+    scratch_dir,
+    write_single_file,
+)
 
 WATERMARK = "1 day"
 # ms form of WATERMARK, interpolated into BOTH the Spark-side cutoff
 # and the q102 oracle SQL so the three can never drift apart.
 WATERMARK_MS = 86_400_000
 assert WATERMARK == "1 day" and WATERMARK_MS == 24 * 3600 * 1000
-
-
-_STAGE_CACHE: dict[str, str] = {}
-# temp dirs created per query run (unlike the cached stage dirs, these
-# are written fresh each call); removed with the same atexit hook
-_EPHEMERAL_DIRS: list[str] = []
 
 
 def q197(spark: SparkSession, sf: str) -> DataFrame:
@@ -139,24 +135,13 @@ def q197(spark: SparkSession, sf: str) -> DataFrame:
     return sink.orderBy("doc_id")
 
 
-@atexit.register
-def _cleanup_dirs() -> None:
-    """Staged copies and per-run dirs are process-scoped scratch;
-    without this, every bench/scaling run leaks a full copy of the
-    events table per sf (ADVICE r2)."""
-    for path in [*_STAGE_CACHE.values(), *_EPHEMERAL_DIRS]:
-        shutil.rmtree(path, ignore_errors=True)
-    _STAGE_CACHE.clear()
-    _EPHEMERAL_DIRS.clear()
-
-
 def _stage(spark: SparkSession, key: str, df_factory) -> str:
     """Write a DataFrame as a 4-file ts-ordered stream source dir,
-    cached per key for the process lifetime (the staged copy is
+    staged once per key for the process lifetime (the staged copy is
     immutable input, so re-staging per query would only re-pay the
-    write; atexit removes it)."""
-    if key not in _STAGE_CACHE:
-        out = tempfile.mkdtemp(prefix="diachronic_stream_src_")
+    write)."""
+
+    def build(out: str) -> None:
         # range-partition + in-partition sort actually establishes the
         # per-file ts order (a global orderBy before repartitionByRange
         # would be re-shuffled in nondeterministic fetch order), with
@@ -164,8 +149,8 @@ def _stage(spark: SparkSession, key: str, df_factory) -> str:
         df_factory().repartitionByRange(
             4, "ts"
         ).sortWithinPartitions("ts").write.mode("overwrite").parquet(out)
-        _STAGE_CACHE[key] = out
-    return _STAGE_CACHE[key]
+
+    return scratch_dir(f"stream_src:{key}", build)
 
 
 def _stage_events(spark: SparkSession, sf: str) -> str:
@@ -193,35 +178,6 @@ def _stage_events_doubled(spark: SparkSession, sf: str) -> str:
 # the session default because its cost is Python-worker parallelism,
 # not state commits.
 STREAM_STATE_PARTITIONS = 4
-
-
-def _checkpoint_dir(sink_key: str) -> str:
-    """Fresh per-drain checkpoint dir under a session-scoped RAM-backed
-    root (tmpfs when available). These drains are verification runs
-    whose checkpoints are ephemeral by construction — Spark's own
-    default (a temp dir deleted on stop) has the same durability; tmpfs
-    just stops the WAL/offset/commit fsyncs from hitting disk
-    (~0.1-0.3 s per drain at sf0.1). A production stream points
-    write_parquet_stream/foreach_batch_sink at a durable location
-    instead. The dir must be FRESH per run: reusing one would resume
-    the previous run's committed offsets and drain nothing."""
-    root = "/dev/shm" if os.path.isdir("/dev/shm") else None
-    path = tempfile.mkdtemp(prefix=f"diachronic_ckpt_{sink_key}_", dir=root)
-    _EPHEMERAL_DIRS.append(path)
-    return path
-
-
-def _link_data_copy_markers(src: str, dst: str) -> None:
-    """copytree copy_function for restoring a pristine parquet layout:
-    DATA files hardlink (metadata-only restore at any size — later
-    deletes/rewrites unlink the copy, never mutate the pristine
-    inode), while commit MARKERS (_SUCCESS, .crc) get real writable
-    byte copies because Hadoop's committer rewrites them IN PLACE
-    (measured on q136: mtime+mode flipped through a hardlink)."""
-    if os.path.basename(src).startswith(("_", ".")):
-        shutil.copyfile(src, dst)
-    else:
-        os.link(src, dst)
 
 
 def _drain_to_table(
@@ -276,7 +232,7 @@ def _drain_to_table(
     if n_state_partitions is not None:
         confs["spark.sql.shuffle.partitions"] = str(n_state_partitions)
     q = None
-    ckpt = _checkpoint_dir(sink_key)
+    ckpt = checkpoint_dir(sink_key)
     try:
         with scoped_conf(spark, confs):
             q = (
@@ -303,7 +259,6 @@ def _drain_to_table(
         if q is not None and q.isActive:
             q.stop()
         spark.catalog.dropTempView(name)
-        shutil.rmtree(ckpt, ignore_errors=True)
 
 
 _WM_CUTOFF_CACHE: dict[str, int] = {}
@@ -529,8 +484,6 @@ def q111(spark: SparkSession, sf: str) -> DataFrame:
     checkpoint), the query awaited to termination, and the OUTPUT
     FILES read back as the result — what's adjudicated is the sink's
     end-to-end content, not a memory table."""
-    import tempfile
-
     from ..streaming.events import write_parquet_stream
 
     src = _stage_events(spark, sf)
@@ -544,10 +497,8 @@ def q111(spark: SparkSession, sf: str) -> DataFrame:
             "value",
         )
     )
-    out = tempfile.mkdtemp(prefix="diachronic_stream_out_q111_")
-    ckpt = tempfile.mkdtemp(prefix="diachronic_stream_ckpt_q111_")
-    _EPHEMERAL_DIRS.extend([out, ckpt])
-    q = write_parquet_stream(proj, out, ckpt)
+    out = run_dir(f"q111_out:{sf}")
+    q = write_parquet_stream(proj, out, run_dir(f"q111_ckpt:{sf}"))
     q.awaitTermination()
     back = spark.read.schema(
         "event_id bigint, user_id bigint, d date, value double"
@@ -568,14 +519,12 @@ def _stage_cdc(spark: SparkSession, sf: str) -> tuple[str, str]:
     construction, so each micro-batch satisfies MERGE's unique-key
     cardinality precondition; file modification times are spaced so
     the file source's mtime ordering replays changes in rank order.
-    Cached per sf (immutable input)."""
-    key = f"{sf}:cdc"
-    if key not in _STAGE_CACHE:
-        import time as _time
+    Staged once per sf (immutable input)."""
+    import time as _time
 
-        from pyspark.sql import Window
+    from pyspark.sql import Window
 
-        root = tempfile.mkdtemp(prefix="diachronic_cdc_")
+    def build(root: str) -> None:
         ev = load(spark, sf, "events")
         w = Window.partitionBy("user_id").orderBy("ts", "event_id")
         ranked = ev.select(
@@ -586,7 +535,6 @@ def _stage_cdc(spark: SparkSession, sf: str) -> tuple[str, str]:
         )
         base.write.mode("overwrite").parquet(f"{root}/base")
         now = _time.time()
-        os.makedirs(f"{root}/changes", exist_ok=True)
         for i in range(2, 6):
             step = (
                 ranked.filter(F.col("rn") == i)
@@ -599,19 +547,12 @@ def _stage_cdc(spark: SparkSession, sf: str) -> tuple[str, str]:
                     .alias("op"),
                 )
             )
-            d = f"{root}/seq_{i}"
-            step.coalesce(1).write.mode("overwrite").parquet(d)
-            # flatten into ONE file per change rank directly under
-            # changes/ (the file source does not recurse into
-            # non-partition subdirs) with strictly increasing mtimes —
-            # the source's file ordering key — per rank
-            (part,) = [f for f in os.listdir(d) if f.endswith(".parquet")]
-            dst = f"{root}/changes/chg_{i}.parquet"
-            shutil.move(os.path.join(d, part), dst)
-            shutil.rmtree(d, ignore_errors=True)
-            os.utime(dst, (now + i * 10, now + i * 10))
-        _STAGE_CACHE[key] = root
-    root = _STAGE_CACHE[key]
+            # one file per change rank, strictly increasing mtimes
+            write_single_file(
+                step, f"{root}/changes/chg_{i}.parquet", now + i * 10
+            )
+
+    root = scratch_dir(f"cdc:{sf}", build)
     return f"{root}/base", f"{root}/changes"
 
 
@@ -635,14 +576,7 @@ def q117(spark: SparkSession, sf: str) -> DataFrame:
     base_path, chg_path = _stage_cdc(spark, sf)
     from ..operators.merge import merge_upsert
 
-    # one work dir per sf, wiped per run (same accumulation fix as
-    # q136 — each dir is small, but bench best-of-N runs add up)
-    wkey = f"{sf}:cdc_apply_work"
-    if wkey not in _STAGE_CACHE:
-        _STAGE_CACHE[wkey] = tempfile.mkdtemp(prefix="diachronic_cdc_apply_")
-    work = _STAGE_CACHE[wkey]
-    for sub in os.listdir(work):
-        shutil.rmtree(os.path.join(work, sub), ignore_errors=True)
+    work = run_dir(f"q117:{sf}")
     state = {"last": -1, "n": 0}
 
     # the version chain's schema is the staged base table's own
@@ -663,7 +597,7 @@ def q117(spark: SparkSession, sf: str) -> DataFrame:
         state["last"] = max(state["last"], batch_id)
         state["n"] += 1
 
-    ckpt = _checkpoint_dir("q117")
+    ckpt = checkpoint_dir("q117")
     stream = (
         spark.readStream.schema(
             "user_id bigint, event_type string, value double, op string"
@@ -682,7 +616,6 @@ def q117(spark: SparkSession, sf: str) -> DataFrame:
     finally:
         if q.isActive:
             q.stop()
-        shutil.rmtree(ckpt, ignore_errors=True)
     if state["n"] != 4 or state["last"] != 3:
         raise RuntimeError(
             f"q117: expected change batches 0-3, applied {state['n']} "
@@ -824,7 +757,7 @@ def q137(spark: SparkSession, sf: str) -> DataFrame:
 def _stage_doc_batches(spark: SparkSession, sf: str) -> str:
     """Stage the q136 ingest fixture: two mtime-ordered single-file
     parquet batches of new documents (the file source's ordering key,
-    q117's staging pattern), cached per sf.
+    q117's staging pattern), staged once per sf.
 
     Batch 0: 50 novel docs (reversed word order of doc_id 100-149,
     +300000) that must SURVIVE the corpus index, plus 25 true
@@ -836,11 +769,9 @@ def _stage_doc_batches(spark: SparkSession, sf: str) -> str:
     index between the micro-batches — the cross-batch fact q136
     exists to adjudicate — plus 25 fresh novel docs (reversed
     175-199, +600000)."""
-    key = f"{sf}:ingest"
-    if key not in _STAGE_CACHE:
-        import time as _time
+    import time as _time
 
-        root = tempfile.mkdtemp(prefix="diachronic_ingest_")
+    def build(root: str) -> None:
         docs = load(spark, sf, "documents").select("doc_id", "text")
 
         def reversed_slice(lo: int, hi: int, off: int) -> DataFrame:
@@ -875,18 +806,13 @@ def _stage_doc_batches(spark: SparkSession, sf: str) -> str:
         b1 = drop_last_word(
             reversed_slice(100, 150, 300000), 200000
         ).unionByName(reversed_slice(175, 200, 600000))
-        os.makedirs(f"{root}/batches", exist_ok=True)
         now = _time.time()
         for i, b in enumerate((b0, b1)):
-            d = f"{root}/tmp_{i}"
-            b.coalesce(1).write.mode("overwrite").parquet(d)
-            (part,) = [f for f in os.listdir(d) if f.endswith(".parquet")]
-            dst = f"{root}/batches/batch_{i}.parquet"
-            shutil.move(os.path.join(d, part), dst)
-            shutil.rmtree(d, ignore_errors=True)
-            os.utime(dst, (now + i * 10, now + i * 10))
-        _STAGE_CACHE[key] = root
-    return f"{_STAGE_CACHE[key]}/batches"
+            write_single_file(
+                b, f"{root}/batches/batch_{i}.parquet", now + i * 10
+            )
+
+    return f"{scratch_dir(f'ingest:{sf}', build)}/batches"
 
 
 def q136(spark: SparkSession, sf: str) -> DataFrame:
@@ -909,46 +835,14 @@ def q136(spark: SparkSession, sf: str) -> DataFrame:
     from .ext_queries import _minhash_index
 
     src = _stage_doc_batches(spark, sf)
-    # ONE work dir per sf, reused across runs (ADVICE r5 item 3: a
-    # fresh mkdtemp per invocation accumulated full index copies under
-    # bench best-of-N — the accumulation q124 avoids with its per-sf
-    # cached dir). Each run wipes the previous run's state and
-    # restores the index from the pristine shared copy, which itself
-    # stays immutable (q112/q113 probe the pre-append state).
-    wkey = f"{sf}:ingest_work"
-    if wkey not in _STAGE_CACHE:
-        _STAGE_CACHE[wkey] = tempfile.mkdtemp(prefix="diachronic_ingest_run_")
-    work = _STAGE_CACHE[wkey]
+    # Each run restores the index from the pristine shared copy, which
+    # itself stays immutable (q112/q113 probe the pre-append state).
+    # The hardlink restore is safe because q136 only APPENDS data to
+    # the index (new part files), never rewrites existing ones; the
+    # invariance test pins the pristine tree bit-for-bit (ADVICE r6).
+    work = run_dir(f"q136:{sf}")
     idx = f"{work}/idx"
-    for sub in os.listdir(work):
-        shutil.rmtree(os.path.join(work, sub), ignore_errors=True)
-    # hardlink "copy": q136 only APPENDS data to the index (new part
-    # files), never rewrites existing ones, so linking DATA files is
-    # safe and the restore cost is metadata-only at any index size.
-    # Commit MARKERS (_SUCCESS, .crc) are different: Hadoop's
-    # committer rewrites them IN PLACE on append — through a hardlink
-    # that mutates the shared pristine copy (measured: mtime+mode
-    # flipped; running as root bypasses the read-only guard) — so
-    # markers get real byte copies, writable, that the committer can
-    # rewrite without touching the pristine inode (ADVICE r6; the
-    # invariance test pins the pristine tree bit-for-bit). Falls back
-    # to a full byte copy across filesystems.
-
-    try:
-        shutil.copytree(
-            _minhash_index(spark, sf), idx,
-            copy_function=_link_data_copy_markers,
-        )
-    except OSError:
-        shutil.rmtree(idx, ignore_errors=True)
-        # copyfile, not copy2: the pristine index is stamped 0o444,
-        # and a mode-preserving copy would hand the committer
-        # read-only markers to rewrite in place — EACCES for any
-        # non-root run (ADVICE r7).
-        shutil.copytree(
-            _minhash_index(spark, sf), idx,
-            copy_function=shutil.copyfile,
-        )
+    restore_tree(_minhash_index(spark, sf), idx)
     state = {"ids": []}
 
     def ingest_batch(batch: DataFrame, batch_id: int) -> None:
@@ -969,7 +863,7 @@ def q136(spark: SparkSession, sf: str) -> DataFrame:
             arrs.unpersist()
         state["ids"].append(batch_id)
 
-    ckpt = _checkpoint_dir("q136")
+    ckpt = checkpoint_dir("q136")
     stream = (
         spark.readStream.schema("doc_id bigint, text string")
         .option("maxFilesPerTrigger", 1)
@@ -986,7 +880,6 @@ def q136(spark: SparkSession, sf: str) -> DataFrame:
     finally:
         if q.isActive:
             q.stop()
-        shutil.rmtree(ckpt, ignore_errors=True)
     if state["ids"] != [0, 1]:
         raise RuntimeError(
             f"q136: expected sequential batches [0, 1], got "
@@ -1033,36 +926,27 @@ def _stage_revision_stream(spark, sf: str) -> tuple[str, str]:
     """Split the committed wiki-revision fixture into a BASE slice
     (founds the store) and three DELTA files staged for the file
     stream source — one file per micro-batch via maxFilesPerTrigger=1,
-    mtime-ordered (the q117 staging trick). Cached per sf (immutable
-    input)."""
-    key = f"{sf}:revstream"
-    if key not in _STAGE_CACHE:
-        import time as _time
+    mtime-ordered (the q117 staging trick). Staged once per sf
+    (immutable input)."""
+    import time as _time
 
-        from ..schemas import WIKI_REVISIONS
-        from ..sources.wiki_fixture import FIXTURE_PATH
+    from ..schemas import WIKI_REVISIONS
+    from ..sources.wiki_fixture import FIXTURE_PATH
 
-        root = tempfile.mkdtemp(prefix="diachronic_revstream_")
+    def build(root: str) -> None:
         revs = spark.read.schema(WIKI_REVISIONS).parquet(FIXTURE_PATH)
         revs.filter(F.col("rev_seq") % 4 == 3).write.mode(
             "overwrite"
         ).parquet(f"{root}/base")
-        os.makedirs(f"{root}/deltas", exist_ok=True)
         now = _time.time()
         for i in range(3):
-            d = f"{root}/tmp_{i}"
-            revs.filter(F.col("rev_seq") % 4 == i).coalesce(1).write.mode(
-                "overwrite"
-            ).parquet(d)
-            (part,) = [
-                f for f in os.listdir(d) if f.endswith(".parquet")
-            ]
-            dst = f"{root}/deltas/delta_{i}.parquet"
-            shutil.move(os.path.join(d, part), dst)
-            shutil.rmtree(d, ignore_errors=True)
-            os.utime(dst, (now + i * 10, now + i * 10))
-        _STAGE_CACHE[key] = root
-    root = _STAGE_CACHE[key]
+            write_single_file(
+                revs.filter(F.col("rev_seq") % 4 == i),
+                f"{root}/deltas/delta_{i}.parquet",
+                now + i * 10,
+            )
+
+    root = scratch_dir(f"revstream:{sf}", build)
     return f"{root}/base", f"{root}/deltas"
 
 
@@ -1096,20 +980,16 @@ def q158(spark: SparkSession, sf: str) -> DataFrame:
     from ..schemas import WIKI_REVISIONS
 
     base_path, delta_path = _stage_revision_stream(spark, sf)
-    wkey = f"{sf}:revstream_store"
-    if wkey not in _STAGE_CACHE:
-        root = tempfile.mkdtemp(prefix="diachronic_snapstream_")
-        base = spark.read.schema(WIKI_REVISIONS).parquet(base_path)
-        refresh_snapshot_store(spark, f"{root}/pristine", base)
-        _STAGE_CACHE[wkey] = root
-    root = _STAGE_CACHE[wkey]
-    store = f"{root}/store"
-    # per-run restore of the pristine base store: data files hardlink
-    # (dynamic overwrite unlinks, never mutates), markers byte-copy
-    shutil.rmtree(store, ignore_errors=True)
-    shutil.copytree(
-        f"{root}/pristine", store, copy_function=_link_data_copy_markers
+    pristine = scratch_dir(
+        f"q158_pristine:{sf}",
+        lambda path: refresh_snapshot_store(
+            spark, path, spark.read.schema(WIKI_REVISIONS).parquet(base_path)
+        ),
     )
+    # per-run restore of the pristine base store (dynamic overwrite
+    # unlinks the files it replaces, never mutates them)
+    store = run_dir(f"q158:{sf}")
+    restore_tree(pristine, store)
     state = {"n": 0, "touched": 0}
 
     def refresh(batch: DataFrame, batch_id: int) -> None:
@@ -1118,7 +998,7 @@ def q158(spark: SparkSession, sf: str) -> DataFrame:
         )
         state["n"] += 1
 
-    ckpt = _checkpoint_dir("q158")
+    ckpt = checkpoint_dir("q158")
     stream = (
         spark.readStream.schema(WIKI_REVISIONS)
         .option("maxFilesPerTrigger", 1)
@@ -1135,7 +1015,6 @@ def q158(spark: SparkSession, sf: str) -> DataFrame:
     finally:
         if q.isActive:
             q.stop()
-        shutil.rmtree(ckpt, ignore_errors=True)
     if state["n"] != 3 or state["touched"] == 0:
         raise RuntimeError(
             f"q158: expected 3 refresh batches touching partitions, "

@@ -47,9 +47,7 @@ from pyspark.sql import functions as F  # noqa: E402
 from diachronic_spark.operators.snapshot import (  # noqa: E402
     refresh_snapshot_store,
 )
-from diachronic_spark.plans.streaming_queries import (  # noqa: E402
-    _link_data_copy_markers,
-)
+from diachronic_spark.plans._scratch import restore_tree  # noqa: E402
 from diachronic_spark.schemas import WIKI_REVISIONS  # noqa: E402
 from diachronic_spark.session import get_spark  # noqa: E402
 from diachronic_spark.sources.wiki_fixture import FIXTURE_PATH  # noqa: E402
@@ -94,10 +92,7 @@ def measure(spark, n_copies: int, root: str) -> tuple[float, int, int]:
     store = f"{root}/store_{n_copies}"
 
     def once() -> float:
-        shutil.rmtree(store, ignore_errors=True)
-        shutil.copytree(
-            pristine, store, copy_function=_link_data_copy_markers
-        )
+        restore_tree(pristine, store)
         t0 = time.perf_counter()
         touched = refresh_snapshot_store(spark, store, delta)
         dt = time.perf_counter() - t0
